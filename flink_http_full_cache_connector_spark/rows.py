@@ -13,14 +13,39 @@ ignoreParseErrors=false, TimestampFormat.SQL``):
   also accepted by flink-json's SQL parser fallback).
 - Nested ROW columns recurse (nested projection supported,
   ``HttpLookupTableSource.scala:70``).
+
+``coerce_value``/``coerce_object`` are the one strict definition of these
+semantics.  ``deserialize_nodes`` applies them column by column and builds
+a ``pyarrow.Table`` (the declared schema's Arrow types, TIMESTAMP as naive
+wall-clock ``timestamp[us]``):
+
+- **fast path**: a value that already has its column's canonical JSON type
+  (``int`` for INT/BIGINT/SMALLINT, ``float`` for DOUBLE/FLOAT, ``str`` for
+  STRING, ``bool`` for BOOLEAN) goes straight into ``pa.array``; a
+  TIMESTAMP column whose non-null values all fully match
+  ``yyyy-MM-dd[ T]HH:mm:ss[.f{1,6}]`` (hour 00-23, minute and second 00-59)
+  is parsed by Arrow's cast.  The fast path accepts a subset of what the
+  strict path accepts and yields the same values.
+- **strict path**: every other value (quoted numbers, numeric nodes under
+  STRING, ints under DOUBLE, any other timestamp text) and every DATE,
+  DECIMAL, ROW, ARRAY and MAP column goes through ``coerce_value``; DECIMAL
+  values are then rounded half-up to the declared scale.
+- **errors**: on any failure the row-wise loop re-runs, so the
+  ``RuntimeError`` names the first node the strict coercion rejects (as it
+  always has), else the first node holding a value its column's Arrow type
+  cannot represent (an out-of-range INT, a DECIMAL over its precision).
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import decimal
 import json
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -86,8 +111,6 @@ def coerce_value(value: Any, dtype: DataType) -> Any:
             return float(value.strip())
         raise ValueError(f"cannot cast {value!r} to double")
     if isinstance(dtype, DecimalType):
-        import decimal
-
         return decimal.Decimal(str(value))
     if isinstance(dtype, TimestampType):
         if isinstance(value, str):
@@ -119,14 +142,80 @@ def coerce_object(node: Any, schema: StructType) -> tuple:
     return tuple(coerce_value(node.get(f.name), f.dataType) for f in schema.fields)
 
 
-def deserialize_nodes(nodes: list[Any], schema: StructType) -> list[tuple]:
-    """Deserialize row-nodes; per-node failure raises with the node text
-    (≙ ``deserializeNode``, ``HttpInputFormatProvider.scala:163-172``)."""
-    out: list[tuple] = []
-    for node in nodes:
-        try:
-            out.append(coerce_object(node, schema))
-        except Exception as e:
-            pretty = json.dumps(node, indent=2, default=str)
-            raise RuntimeError(f"Failed to deserialize JSON node: {pretty}") from e
-    return out
+#: the JSON type a value already has when its declared type needs no coercion
+_CANONICAL = {
+    IntegerType: int,
+    LongType: int,
+    ShortType: int,
+    DoubleType: float,
+    FloatType: float,
+    StringType: str,
+    BooleanType: bool,
+}
+_NONE = type(None)
+
+#: SQL-format timestamps that Arrow's string cast parses exactly as
+#: ``_parse_sql_timestamp`` does (year 0000 excluded: strptime rejects it)
+_SQL_TIMESTAMP = (
+    r"^(?:[1-9]\d{3}|0[1-9]\d\d|00[1-9]\d|000[1-9])-\d\d-\d\d[ T]"
+    r"(?:[01]\d|2[0-3]):[0-5]\d:[0-5]\d(?:\.\d{1,6})?$"
+)
+
+
+def _column(values: list[Any], dtype: DataType, atype: pa.DataType) -> pa.Array:
+    """One declared column's JSON values → Arrow array (fast path where the
+    values allow it, ``coerce_value`` for the rest)."""
+    canonical = _CANONICAL.get(type(dtype))
+    if canonical is not None:
+        if not set(map(type, values)) <= {canonical, _NONE}:
+            values = [v if type(v) is canonical else coerce_value(v, dtype) for v in values]
+        return pa.array(values, atype)
+    if isinstance(dtype, TimestampType) and set(map(type, values)) <= {str, _NONE}:
+        text = pa.array(values, pa.string())
+        if pc.all(pc.match_substring_regex(text, _SQL_TIMESTAMP)).as_py() is not False:
+            try:
+                return text.cast(atype)
+            except pa.ArrowInvalid:  # a day the calendar lacks: strict path
+                pass
+    values = [coerce_value(v, dtype) for v in values]
+    if isinstance(dtype, DecimalType):
+        # a context as wide as the column: a value over its precision raises
+        exp = decimal.Decimal(1).scaleb(-dtype.scale)
+        ctx = decimal.Context(prec=dtype.precision, rounding=decimal.ROUND_HALF_UP)
+        values = [None if v is None else v.quantize(exp, context=ctx) for v in values]
+    return pa.array(values, atype)
+
+
+def _table(nodes: list[Any], schema: StructType, arrow_schema: pa.Schema) -> pa.Table:
+    if not set(map(type, nodes)) <= {dict}:
+        raise ValueError("expected JSON objects")
+    return pa.Table.from_arrays(
+        [
+            _column([n.get(f.name) for n in nodes], f.dataType, af.type)
+            for f, af in zip(schema.fields, arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+
+
+def deserialize_nodes(nodes: list[Any], schema: StructType) -> pa.Table:
+    """Deserialize row-nodes column-wise into a ``pyarrow.Table``; a failure
+    raises with the text of the first bad node (≙ ``deserializeNode``,
+    ``HttpInputFormatProvider.scala:163-172``)."""
+    arrow_schema = to_arrow_schema(schema, timestamp_utc=False)
+    try:
+        return _table(nodes, schema, arrow_schema)
+    except Exception:
+        # row-wise: first the strict coercion of every node, then whether
+        # each node's values fit their columns' Arrow types
+        for check in (
+            lambda node: coerce_object(node, schema),
+            lambda node: _table([node], schema, arrow_schema),
+        ):
+            for node in nodes:
+                try:
+                    check(node)
+                except Exception as e:
+                    pretty = json.dumps(node, indent=2, default=str)
+                    raise RuntimeError(f"Failed to deserialize JSON node: {pretty}") from e
+        raise

@@ -25,12 +25,18 @@ Parity notes:
   endpoint per microbatch once ``cache.refresh-interval`` has elapsed
   (FIXED_DELAY), mirroring ``FullCachingLookupProvider`` +
   ``PeriodicCacheReloadTrigger`` (A5, ``HttpLookupTableSource.scala:36-54``).
+- **Row hand-off**: both readers turn the coerced ``pyarrow.Table`` into
+  row tuples.  Spark reads the naive datetimes of a tuple-yielding reader
+  in the reading process's local time zone, the meaning this source has
+  always given them; Spark's simple stream reader takes only tuples.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import time
+from typing import Any, Iterator
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -53,6 +59,30 @@ _SPARK_INTERNAL_OPTIONS = {"path", "paths"}
 def _validated(options: dict) -> HttpLookupOptions:
     cleaned = {k: v for k, v in options.items() if k not in _SPARK_INTERNAL_OPTIONS}
     return validate_options(cleaned)
+
+
+def _python_value(value: Any, atype: pa.DataType) -> Any:
+    """An Arrow value as Spark's row converter takes it (MAP as a dict)."""
+    if value is None:
+        return None
+    if pa.types.is_map(atype):
+        return {k: _python_value(v, atype.item_type) for k, v in value}
+    if pa.types.is_struct(atype):
+        return {f.name: _python_value(value[f.name], f.type) for f in atype}
+    if pa.types.is_list(atype):
+        return [_python_value(v, atype.value_type) for v in value]
+    return value
+
+
+def _row_tuples(table: pa.Table) -> list[tuple]:
+    """The table's columns zipped into row tuples (naive datetimes kept)."""
+    columns = [
+        [_python_value(v, c.type) for v in c.to_pylist()]
+        if pa.types.is_nested(c.type)
+        else c.to_pylist()
+        for c in table.columns
+    ]
+    return list(zip(*columns))
 
 
 class HttpLookupDataSource(DataSource):
@@ -91,7 +121,7 @@ class HttpLookupReader(DataSourceReader):
     def read(self, partition: InputPartition) -> Iterator[tuple]:
         from flink_http_full_cache_connector_spark.sources.lookup import fetch_rows
 
-        yield from fetch_rows(self.opts, self.schema_)
+        yield from _row_tuples(fetch_rows(self.opts, self.schema_))
 
 
 class HttpLookupStreamReader(SimpleDataSourceStreamReader):
@@ -112,15 +142,13 @@ class HttpLookupStreamReader(SimpleDataSourceStreamReader):
         return {"epoch": 0, "last_load_end_ms": 0}
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        import time
-
         from flink_http_full_cache_connector_spark.sources.lookup import fetch_rows
 
         now_ms = int(time.time() * 1000)
         interval_ms = int(self.opts.refresh_interval_seconds * 1000)
         if now_ms - start["last_load_end_ms"] < interval_ms:
             return iter(()), start
-        rows = fetch_rows(self.opts, self.schema_)
+        rows = _row_tuples(fetch_rows(self.opts, self.schema_))
         end = {"epoch": start["epoch"] + 1, "last_load_end_ms": int(time.time() * 1000)}
         return iter(rows), end
 
@@ -131,7 +159,7 @@ class HttpLookupStreamReader(SimpleDataSourceStreamReader):
             return iter(())
         from flink_http_full_cache_connector_spark.sources.lookup import fetch_rows
 
-        return iter(fetch_rows(self.opts, self.schema_))
+        return iter(_row_tuples(fetch_rows(self.opts, self.schema_)))
 
 
 def register(spark) -> None:

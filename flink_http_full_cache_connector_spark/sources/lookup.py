@@ -21,6 +21,7 @@ import time
 from dataclasses import dataclass
 from dataclasses import field as dataclass_field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -62,8 +63,8 @@ def fetch_rows(
     schema: StructType,
     *,
     http_metrics: RequestMetrics | None = None,
-) -> list[tuple]:
-    """One full scan: GET → parse → pointer → fan-out → typed rows."""
+) -> pa.Table:
+    """One full scan: GET → parse → pointer → fan-out → typed Arrow table."""
     body = fetch_with_retry(
         opts.url,
         connect_timeout_seconds=opts.connect_timeout_seconds,
@@ -92,6 +93,16 @@ def _local_relation(spark: SparkSession, rows: list[tuple], schema: StructType) 
         return spark.createDataFrame(rows, schema).coalesce(1)
 
 
+def _timestamps_as_utc(table: pa.Table) -> pa.Table:
+    """Top-level TIMESTAMP columns as UTC instants of their wall-clock
+    values, the meaning this route has always given them; Spark reads a
+    naive timestamp nested in a ROW/ARRAY/MAP in the session time zone."""
+    naive, utc = pa.timestamp("us"), pa.timestamp("us", tz="UTC")
+    return table.cast(
+        pa.schema([f.with_type(utc) if f.type == naive else f for f in table.schema])
+    )
+
+
 def create_lookup_df(
     spark: SparkSession,
     options: dict[str, object] | HttpLookupOptions,
@@ -102,12 +113,13 @@ def create_lookup_df(
     """Build the full-cache lookup DataFrame (one bounded scan).
 
     The whole payload lives on the driver ≙ the reference's single
-    ``GenericInputSplit`` (``HttpInputFormatProvider.scala:80-81``).  The
-    rows become an Arrow-backed **LocalTableScan** — a JVM-side local
-    relation with no Python workers in the execution path, which Catalyst
-    broadcasts directly in the lookup join (no shuffle, no scan stage).
-    Falls back to the classic ``createDataFrame`` path for payloads pandas
-    can't represent (e.g. deeply nested rows).
+    ``GenericInputSplit`` (``HttpInputFormatProvider.scala:80-81``).
+    Fetch, JSON parse and the column-wise coercion into a ``pyarrow.Table``
+    run eagerly here, so every load error raises from this call.  The table
+    goes to ``spark.createDataFrame`` as is: an eager JVM-side
+    **LocalTableScan** with no Python workers in the execution path and no
+    Spark job to build it, which Catalyst broadcasts directly in the lookup
+    join (no shuffle, no scan stage).  No session conf is touched.
     """
     if isinstance(schema, str):
         # DDL-string convenience (`"id INT, name STRING"`); without this,
@@ -116,13 +128,13 @@ def create_lookup_df(
         schema = StructType.fromDDL(schema)
     opts = options if isinstance(options, HttpLookupOptions) else validate_options(options)
     t0 = time.monotonic()
-    rows = fetch_rows(
+    table = fetch_rows(
         opts, schema, http_metrics=stats.http if stats is not None else None
     )
-    df = _local_relation(spark, rows, schema)
+    df = spark.createDataFrame(_timestamps_as_utc(table), schema)
     if stats is not None:
         stats.fetch_count += 1
         stats.last_fetch_duration_s = time.monotonic() - t0
         stats.total_fetch_duration_s += stats.last_fetch_duration_s
-        stats.last_row_count = len(rows)
+        stats.last_row_count = table.num_rows
     return df

@@ -8,11 +8,20 @@ atomically replaces the old; a reload whose retries exhaust **fails the
 job** (no stale-cache fallback, pinned by
 ``HttpLookupConnectorIntegrationTest.scala:546-672``).
 
-Spark realization: the snapshot is a driver-built, Spark-cached DataFrame.
+Spark realization: the snapshot is the DataFrame ``create_lookup_df``
+returns — an eager JVM local relation built from the driver-side Arrow
+table — marked for Spark's cache but not materialized: no Spark job runs in
+``check_and_reload``, and the first batch that reads the snapshot builds
+the cached copy inside its own broadcast job.  The cache keeps every later
+batch off the local rows: Catalyst re-folds a filter over a bare
+``LocalRelation`` row by row in each batch's optimizer, a cost that grows
+with the dimension.  Fetch, coercion and the Arrow hand-off all run inside
+``check_and_reload``, so a failed reload raises there and leaves the
+current snapshot and its FIXED_DELAY clock untouched.
 ``check_and_reload`` is invoked between microbatches (from ``foreachBatch``
 or any driver loop) — never concurrently with a running batch, so the swap
 cannot race in-flight tasks.  The old snapshot is unpersisted (non-blocking)
-after the swap.
+at the swap.
 """
 
 from __future__ import annotations
@@ -81,15 +90,13 @@ class RefreshingLookupCache:
         with self._lock:
             if not force and not self.due():
                 return False
-            new_df = create_lookup_df(
-                self.spark, self.opts, self.schema, stats=self.stats
-            ).cache()
-            new_df.count()  # materialize now: load errors surface here, not mid-join
-            old = self._snapshot
-            self._snapshot = new_df
+            new_df = create_lookup_df(self.spark, self.opts, self.schema, stats=self.stats)
+            # old entry first: a reload of an identical payload has the same
+            # plan, and Spark keeps one cache entry per plan
+            if self._snapshot is not None:
+                self._snapshot.unpersist(blocking=False)
+            self._snapshot = new_df.cache()
             self._last_load_end = time.monotonic()
-            if old is not None:
-                old.unpersist(blocking=False)
             return True
 
 

@@ -115,3 +115,46 @@ def test_stream_refresh_v1_to_v2(registered, http_server, tmp_path):
     finally:
         query.stop()
     assert http_server.request_count >= 2
+
+
+def test_row_tuples_give_spark_row_converter_values():
+    """The stream reader's tuples carry what Spark's row converter takes:
+    naive datetimes, dicts for MAP and ROW, lists for ARRAY — the values
+    the strict per-row coercion yields."""
+    import datetime as dt
+
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        IntegerType,
+        MapType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    from flink_http_full_cache_connector_spark.rows import deserialize_nodes
+    from flink_http_full_cache_connector_spark.sources.datasource import _row_tuples
+
+    inner = StructType([StructField("a", IntegerType()), StructField("t", TimestampType())])
+    schema = StructType(
+        [
+            StructField("id", IntegerType()),
+            StructField("ts", TimestampType()),
+            StructField("r", inner),
+            StructField("arr", ArrayType(IntegerType())),
+            StructField("m", MapType(StringType(), ArrayType(DoubleType()))),
+        ]
+    )
+    nodes = [
+        {"id": 1, "ts": "2024-01-15 10:30:00.5", "r": {"a": "7", "t": "2024-01-15 10:30:00"},
+         "arr": [1, None, "3"], "m": {"x": [1, 2.5], "y": None}},
+        {"id": 2},
+    ]
+    assert _row_tuples(deserialize_nodes(nodes, schema)) == [
+        (1, dt.datetime(2024, 1, 15, 10, 30, 0, 500000),
+         {"a": 7, "t": dt.datetime(2024, 1, 15, 10, 30)}, [1, None, 3],
+         {"x": [1.0, 2.5], "y": None}),
+        (2, None, None, None, None),
+    ]

@@ -300,3 +300,51 @@ def test_observed_lookup_join_counts_probe_rows_not_output_rows(spark):
     )
     assert joined.count() == 4  # the join output itself keeps every match
     assert obs.get == {"lookup_total": 3, "lookup_hits": 2}
+
+
+@pytest.mark.parametrize("route", ["driver", "format"])
+def test_out_of_range_int_fails_with_the_reference_error(spark, http_server, route):
+    """A JSON integer the declared INT cannot hold fails the load with
+    ``Failed to deserialize JSON node`` naming the node, on both routes —
+    not an Arrow fallback warning and a late Spark range error."""
+    import json
+    import warnings
+
+    from flink_http_full_cache_connector_spark.sources.datasource import register
+
+    bad = {"id": 2**40, "name": "too big"}
+    http_server.set_payload([{"id": 1, "name": "ok"}, bad])
+    ddl = "id INT, name STRING"
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # no Arrow-fallback UserWarning either
+        with pytest.raises(Exception) as err:
+            if route == "driver":
+                create_lookup_df(spark, {"url": http_server.url}, ddl)
+            else:
+                register(spark)
+                spark.read.format("http-lookup-full-cache").schema(ddl).option(
+                    "url", http_server.url
+                ).load().collect()
+    msg = str(err.value)
+    assert "Failed to deserialize JSON node" in msg and str(2**40) in msg
+    if route == "driver":
+        assert isinstance(err.value, RuntimeError)
+        assert msg == "Failed to deserialize JSON node: " + json.dumps(bad, indent=2)
+
+
+def test_driver_load_leaves_session_conf_unchanged(spark, http_server):
+    """A library call must not flip session conf: the driver-route load
+    hands Spark an Arrow table without enabling Arrow for the session."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        df = create_lookup_df(spark, {"url": http_server.url}, USERS_SCHEMA)
+        assert spark.conf.get(key) == "false"
+        assert df.count() == 10
+        assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)

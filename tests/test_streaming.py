@@ -131,6 +131,51 @@ def test_refresh_fail_fast_propagates(spark, http_server):
     assert m["http_failures"] == 2
 
 
+def test_refresh_snapshot_is_cached_lazily_and_bad_reload_keeps_it(spark, http_server):
+    """A reload runs no Spark job: the snapshot is the eager local relation
+    ``create_lookup_df`` built, marked for Spark's cache, so a batch joins
+    an ``InMemoryRelation`` rather than re-folding the local rows in its
+    optimizer.  A reload of an identical payload stays cached.  A reload
+    whose payload holds a malformed value raises from ``check_and_reload``
+    itself and leaves the served snapshot and the FIXED_DELAY clock as
+    they were."""
+    from flink_http_full_cache_connector_spark.operators.lookup_join import lookup_join
+
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-reload", "reload runs no job")
+    try:
+        cache = RefreshingLookupCache(
+            spark, {"url": http_server.url, "cache.refresh-interval": "PT0.1S"}, USERS_SCHEMA
+        )
+        first = cache.current()
+        assert cache.check_and_reload(force=True)  # the same payload again
+        assert sc.statusTracker().getJobIdsForGroup("snapshot-reload") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    snap = cache.current()
+    assert snap is not first
+    assert snap.storageLevel.useMemory
+    plan = snap._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" in plan and "LocalTableScan" in plan
+    batch = lookup_join(spark.range(5).withColumnRenamed("id", "k"), snap, on=[("k", "id")])
+    batch_plan = batch._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" in batch_plan and "LocalRelation" not in batch_plan
+    assert batch.count() == 5
+
+    last_load_end = cache._last_load_end
+    bad = [{**u, "id": "not-an-int"} if u["id"] == 4 else u for u in USERS_V2]
+    http_server.set_payload(bad)
+    time.sleep(0.2)
+    with pytest.raises(RuntimeError, match="Failed to deserialize JSON node") as err:
+        cache.check_and_reload()
+    assert '"id": "not-an-int"' in str(err.value)
+    assert cache.current() is snap
+    assert cache._last_load_end == last_load_end
+    assert snap.storageLevel.useMemory
+    assert sorted(r.name for r in snap.collect())[0] == "Mock User 1"
+    assert cache.metrics()["refresh_count"] == 2
+
+
 def test_enrich_stream_example_job_shape(spark, http_server):
     """§3.3 flagship pipeline: datagen → refresh-aware lookup join → sink."""
     cache = RefreshingLookupCache(
