@@ -96,11 +96,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     return F.array_distinct(F.transform(idx, gram))
 
 
-def md5_mod_p(col: Column) -> Column:
-    """Portable 31-bit hash: first 8 md5 hex chars mod P."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long") % P
-
-
 def _doc_shingles(txt: str | None, n: int = 3):
     """Yield ``(shingle, md5_hexdigest)`` for ONE document — the single
     Python definition of the tokenize → n-gram → first-occurrence-distinct
@@ -109,7 +104,8 @@ def _doc_shingles(txt: str | None, n: int = 3):
     ``minhash_signatures``, so a tokenizer change had to land in three
     places alongside :func:`word_shingles`).
 
-    Value contract (pinned by the kernels-agree fixtures): same delimiter
+    Value contract (pinned against a ``word_shingles`` + ``F.md5``
+    reference in the tests): same delimiter
     regex as ``word_shingles`` (``TOKEN_DELIM_RE`` verbatim), same
     space-only trim as ``F.trim``, UTF-8 md5, first-occurrence distinct.
     Callers derive their hash domain from the hexdigest (``[:8] % P`` for
@@ -130,28 +126,24 @@ def _shingle_table(
     docs: DataFrame,
     *,
     max_df: int | None = None,
-    kernel: str = "arrow",
     n: int = 3,
 ) -> DataFrame:
-    """(doc_id, s, h, fp) — exploded distinct shingles with portable
-    hashes: ``h`` (31-bit, the minhash domain) and ``fp`` (60-bit identity
-    fingerprint the equi-joins key on — round-8 verdict #5), both
-    md5-prefix-derived.
+    """(doc_id, s, fp) — exploded distinct shingles with ``fp``, the
+    60-bit md5-prefix identity fingerprint the equi-joins key on (round-8
+    verdict #5).
 
-    ``kernel="arrow"`` (default since the round-9 sf100 profile) builds
-    the shingles in one Arrow-batched map pass — tokenize, 3-gram
-    concat, first-occurrence dedup, md5 — in plain Python per document.
-    Why: ``word_shingles`` is a ``transform`` HOF and therefore
-    CodegenFallback (the round-8 interpreted-fold discovery applies to
-    STRING kernels too) plus an O(len²)-comparison ``array_distinct``;
-    the sf100 profile measured the shingle materialization alone at
-    495.8 s of dedup_minhash_capped's 607 s wall.  The Python pass emits
-    IDENTICAL values by construction: same delimiter regex
-    (``TOKEN_DELIM_RE`` verbatim), same space-only trim as ``F.trim``,
-    same UTF-8 md5 hex prefixes, same first-occurrence distinct — and
+    The shingles are built in one Arrow-batched map pass — tokenize,
+    n-gram concat, first-occurrence dedup, md5 — in plain Python per
+    document (:func:`_doc_shingles`).  Why not ``word_shingles``: it is a
+    ``transform`` HOF and therefore CodegenFallback (the round-8
+    interpreted-fold discovery applies to STRING kernels too) plus an
+    O(len²)-comparison ``array_distinct``; the sf100 profile measured the
+    shingle materialization alone at 495.8 s of dedup_minhash_capped's
+    607 s wall.  The Python pass emits the same values as
+    ``word_shingles`` + ``F.md5`` (same delimiter regex, same space-only
+    trim, same UTF-8 md5 hex prefix, same first-occurrence distinct) and
     every consumer is oracle-gated, so any divergence fails the hash
-    gates immediately.  ``kernel="fold"`` keeps the pure-JVM expression
-    pipeline for cross-checks.
+    gates immediately.
 
     Input is widened to cluster parallelism first: the shingle fan-out
     is the map-side hot path, and a single-file input would otherwise run
@@ -166,38 +158,23 @@ def _shingle_table(
     the removal is a broadcast anti-join — map-side, no second data
     shuffle.
     """
-    docs = widen(docs)
-    if kernel == "arrow":
-        import pandas as pd
+    import pandas as pd
 
-        def _sh(batches):
-            for pdf in batches:
-                ids: list[int] = []
-                ss: list[str] = []
-                hs: list[int] = []
-                fps: list[int] = []
-                for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                    for s, d in _doc_shingles(txt, n):
-                        ids.append(did)
-                        ss.append(s)
-                        hs.append(int(d[:8], 16) % P)
-                        fps.append(int(d[:15], 16))
-                yield pd.DataFrame(
-                    {"doc_id": ids, "s": ss, "h": hs, "fp": fps}
-                )
+    def _sh(batches):
+        for pdf in batches:
+            ids: list[int] = []
+            ss: list[str] = []
+            fps: list[int] = []
+            for did, txt in zip(pdf["doc_id"], pdf["text"]):
+                for s, d in _doc_shingles(txt, n):
+                    ids.append(did)
+                    ss.append(s)
+                    fps.append(int(d[:15], 16))
+            yield pd.DataFrame({"doc_id": ids, "s": ss, "fp": fps})
 
-        sh = docs.select("doc_id", "text").mapInPandas(
-            _sh, "doc_id long, s string, h long, fp long"
-        )
-    elif kernel == "fold":
-        sh = docs.select(
-            "doc_id", F.explode(word_shingles(F.col("text"), n)).alias("s")
-        ).withColumn("h", md5_mod_p(F.col("s"))).withColumn(
-            "fp",
-            F.conv(F.substring(F.md5(F.col("s")), 1, 15), 16, 10).cast("long"),
-        )
-    else:  # pragma: no cover
-        raise ValueError(f"kernel must be 'arrow' or 'fold', got {kernel}")
+    sh = widen(docs).select("doc_id", "text").mapInPandas(
+        _sh, "doc_id long, s string, fp long"
+    )
     if max_df is not None:
         stop = (
             sh.groupBy("s")
@@ -461,84 +438,52 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash + LSH (the 100 TB near-dup path)
 # ---------------------------------------------------------------------------
 
-def minhash_signatures(
-    docs: DataFrame,
-    *,
-    shingles: DataFrame | None = None,
-    kernel: str | None = None,
-) -> DataFrame:
-    """(doc_id, n [shingle count], m0..m{K-1}).
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, n [shingle count], m0..m{K-1}); a document with no
+    shingles has no row.
 
-    ``kernel=None`` (default) resolves to ``"arrow"`` when no shingle
-    relation is supplied and ``"fold"`` when one is: the arrow kernel
-    re-tokenizes in-row and CANNOT consume a prebuilt shingle relation,
-    so the explicit combination ``kernel="arrow", shingles=...`` raises
-    instead of silently degrading to the fold path (round-9 ADVICE).
+    Each document's signature is computed INSIDE the tokenize pass — the
+    document is whole within its row, so the K affine minima
+    ``min((a_j·h + b_j) mod P)`` over its shingle hashes ``h`` (first 8
+    md5 hex chars mod P) are per-row integer arithmetic and the whole
+    relation emits map-side with ZERO shuffle (a groupBy over the
+    ~265 M-row shingle relation cost 90.6 s of the sf100 wall).  The
+    tokenize/shingle/md5 rule is the shared :func:`_doc_shingles` helper.
+    All-integer math — numpy int64 (a_j·h + b_j < 2^62 by construction) —
+    so the signatures are exact.  The second tokenize pass this costs
+    (the verify join still persists the shingle relation separately) is
+    ~half the shuffle it replaces."""
+    import numpy as np
+    import pandas as pd
 
-    ``kernel="arrow"`` (default since the round-9 sf100 profile) computes
-    each document's signature INSIDE the tokenize pass — the document is
-    whole within its row, so the K affine minima are per-row integer
-    arithmetic and the whole relation emits map-side with ZERO shuffle
-    (the fold path's groupBy moved the ~265 M-row shingle relation through
-    an exchange: 90.6 s of the sf100 wall).  The tokenize/shingle/md5
-    rule is the shared :func:`_doc_shingles` helper (one definition for
-    every Arrow kernel).  All-integer math — numpy int64 (a_j·h + b_j <
-    2^62 by construction) replays the JVM fold's mod exactly, so the
-    signatures are identical, not merely close.  The second tokenize
-    pass this costs (the verify join still persists the shingle relation
-    separately) is ~half the shuffle it replaces.
+    A = np.array(MINHASH_A, dtype=np.int64)
+    B = np.array(MINHASH_B, dtype=np.int64)
 
-    ``kernel="fold"`` groups the shingle relation: pass ``shingles`` (a
-    ``_shingle_table`` result, typically persisted) when the caller also
-    needs it — otherwise the shingle fan-out would execute twice."""
-    if kernel is None:
-        kernel = "arrow" if shingles is None else "fold"
-    if kernel == "arrow":
-        if shingles is not None:
-            raise ValueError(
-                "minhash_signatures: kernel='arrow' re-tokenizes documents "
-                "in-row and cannot reuse a prebuilt shingle relation — "
-                "pass kernel='fold' (or omit kernel) with shingles="
-            )
-        import numpy as np
-        import pandas as pd
-
-        A = np.array(MINHASH_A, dtype=np.int64)
-        B = np.array(MINHASH_B, dtype=np.int64)
-
-        def _sig(batches):
-            for pdf in batches:
-                out: dict[str, list[int]] = {"doc_id": [], "n": []}
+    def _sig(batches):
+        for pdf in batches:
+            out: dict[str, list[int]] = {"doc_id": [], "n": []}
+            for j in range(NUM_MINHASHES):
+                out[f"m{j}"] = []
+            for did, txt in zip(pdf["doc_id"], pdf["text"]):
+                hs: set[int] = set()
+                n_sh = 0
+                for _s, d in _doc_shingles(txt):
+                    n_sh += 1
+                    hs.add(int(d[:8], 16) % P)
+                if not hs:
+                    continue  # no shingles → no signature row
+                hv = np.fromiter(hs, dtype=np.int64, count=len(hs))
+                m = ((A[:, None] * hv[None, :] + B[:, None]) % P).min(axis=1)
+                out["doc_id"].append(did)
+                out["n"].append(n_sh)
                 for j in range(NUM_MINHASHES):
-                    out[f"m{j}"] = []
-                for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                    hs: set[int] = set()
-                    n_sh = 0
-                    for _s, d in _doc_shingles(txt):
-                        n_sh += 1
-                        hs.add(int(d[:8], 16) % P)
-                    if not hs:
-                        continue  # no shingles → no signature row (= fold)
-                    hv = np.fromiter(hs, dtype=np.int64, count=len(hs))
-                    m = ((A[:, None] * hv[None, :] + B[:, None]) % P).min(axis=1)
-                    out["doc_id"].append(did)
-                    out["n"].append(n_sh)
-                    for j in range(NUM_MINHASHES):
-                        out[f"m{j}"].append(int(m[j]))
-                yield pd.DataFrame(out)
+                    out[f"m{j}"].append(int(m[j]))
+            yield pd.DataFrame(out)
 
-        schema = "doc_id long, n long, " + ", ".join(
-            f"m{j} long" for j in range(NUM_MINHASHES)
-        )
-        return widen(docs).select("doc_id", "text").mapInPandas(_sig, schema)
-    if kernel != "fold":  # pragma: no cover
-        raise ValueError(f"kernel must be 'arrow' or 'fold', got {kernel}")
-    sh = _shingle_table(docs) if shingles is None else shingles
-    aggs = [F.count("*").alias("n")] + [
-        F.min((F.lit(MINHASH_A[j]) * F.col("h") + F.lit(MINHASH_B[j])) % P).alias(f"m{j}")
-        for j in range(NUM_MINHASHES)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    schema = "doc_id long, n long, " + ", ".join(
+        f"m{j} long" for j in range(NUM_MINHASHES)
+    )
+    return widen(docs).select("doc_id", "text").mapInPandas(_sig, schema)
 
 
 def _band_rows(sig: DataFrame) -> DataFrame:
@@ -1481,7 +1426,7 @@ EMB_LSH_PRUNE_MARGIN = 1e-3
     "candidate set, GEMM ulps can only cost a wasted fold, never flip "
     "a row.  Caveat (round-10 ADVICE): the stage-1 SIGN test itself "
     "runs on a float64 GEMM whose summation order differs from the "
-    "sequential fold the fold twin / oracle use, so a plane dot within "
+    "sequential fold the oracle uses, so a plane dot within "
     "~1e-12 of zero can bucket a vector differently and change the "
     "candidate SET (a pair reachable only through that bucket would be "
     "dropped, not re-folded).  Per-sign probability ~1e-15 on this "
@@ -1543,26 +1488,18 @@ def _embedding_lsh_pairs(
     spark: SparkSession,
     sf_dir: str,
     *,
-    kernel: str = "arrow",
     bucket_cap: int | None = None,
     group_bits: int | None = None,
 ) -> DataFrame:
-    """See :func:`dedup_embedding_lsh`.  ``kernel="fold"`` keeps the pure
-    expression pipeline (fold-dot signatures → id-pair bucket self-join →
-    fold verify on every candidate) as the cross-check twin.
-    ``bucket_cap`` / ``group_bits`` are the production knobs of
-    :func:`dedup_embedding_lsh_capped` (see the arrow kernel docstring);
-    the fold kernel applies the cap as a count window on the same
-    (table_id, bucket) shuffle its self-join needs (the
-    lsh_candidate_pairs rule) and ignores ``group_bits`` (it has no
-    per-group overhead to amortize)."""
+    """See :func:`dedup_embedding_lsh`.  ``bucket_cap`` / ``group_bits``
+    are the production knobs of :func:`dedup_embedding_lsh_capped` (see
+    :func:`_embedding_lsh_survivors_arrow`)."""
     from flink_http_full_cache_connector_spark.functions.vectors import (
         cosine_with_norms,
         norm,
     )
     from flink_http_full_cache_connector_spark.operators.similarity import (
         lsh_planes,
-        lsh_signatures,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1570,39 +1507,11 @@ def _embedding_lsh_pairs(
     # driver actions are fine when the payload is O(1))
     bits = _lsh_bits_for(emb.count())
     planes = lsh_planes(emb, tables=DEDUP_LSH_TABLES, bits=bits)
-    if kernel == "arrow":
-        surv = _embedding_lsh_survivors_arrow(
-            emb, planes, bits, bucket_cap=bucket_cap, group_bits=group_bits
-        )
-    elif kernel == "fold":
-        vecs = widen(emb).select(
-            "vec_id", as_double(F.col("embedding")).alias("v")
-        )
-        # candidate generation on IDS ONLY; persist: the bucket SELF-join
-        # consumes sigs twice, and without a materialization Spark
-        # re-executes the whole signature subtree per side (measured 2x)
-        sigs = (
-            lsh_signatures(vecs, planes, tables=DEDUP_LSH_TABLES)
-            .select("vec_id", "table_id", "bucket")
-            .persist()
-        )
-        if bucket_cap is not None:
-            wb = Window.partitionBy("table_id", "bucket")
-            sigs = sigs.withColumn("_bc", F.count("*").over(wb)).where(
-                F.col("_bc") <= bucket_cap
-            )
-        a = sigs.select(F.col("vec_id").alias("vec_a"), "table_id", "bucket")
-        b = sigs.select(F.col("vec_id").alias("vec_b"), "table_id", "bucket")
-        surv = (
-            a.join(b, ["table_id", "bucket"])
-            .where(F.col("vec_a") < F.col("vec_b"))
-            .select("vec_a", "vec_b")
-            .distinct()
-        )
-    else:  # pragma: no cover
-        raise ValueError(f"kernel must be 'arrow' or 'fold', got {kernel}")
-    # the DECISION pass — identical in both kernels: exact fold cosine on
-    # the candidate/survivor pairs, threshold applied to the FOLD value
+    surv = _embedding_lsh_survivors_arrow(
+        emb, planes, bits, bucket_cap=bucket_cap, group_bits=group_bits
+    )
+    # the DECISION pass: exact fold cosine on the survivor pairs,
+    # threshold applied to the FOLD value
     ea = emb.select(
         F.col("vec_id").alias("vec_a"), as_double(F.col("embedding")).alias("va")
     ).withColumn("na", norm(F.col("va")))
@@ -1628,13 +1537,13 @@ def _embedding_lsh_survivors_arrow(
 ) -> DataFrame:
     """Distinct (vec_a, vec_b) id pairs that share a bucket AND clear the
     float32 GEMM prune at ``COSINE_DUP_THRESHOLD - EMB_LSH_PRUNE_MARGIN``
-    — a SUPERSET of the fold twin's above-threshold pairs (margin ≫
-    float32 error), never a miss; the exact fold downstream makes the
-    decision.
+    — a SUPERSET of the same-bucket pairs whose exact cosine clears the
+    threshold (margin ≫ float32 error), never a miss; the exact fold
+    downstream makes the decision.
 
     Stage 1 (map-only): sign bits via one float64 GEMM per Arrow batch
     against the collected (L·B)×dim plane matrix (metadata-sized); the
-    sign test replays the fold's ``dot(v, dv) >= 0`` — float64 GEMM ulp
+    sign test replays the oracle's ``dot(v, dv) >= 0`` — float64 GEMM ulp
     noise flips a sign only for |dot| ≲ 1e-14 (pinned by the near-zero
     fixture; probability ~1e-15 per test on real data).  Emits one row
     per (vector, table) carrying the vector as float32 — half the
@@ -2154,9 +2063,7 @@ FROM assign a LEFT JOIN dropped d ON d.vec_id = a.vec_id
     "coarse cells (coarse_probes=2, round-7 verdict #2): stage 2 picks "
     "the best fine centroid across both cells' fine sets, flattening "
     "the coarse→fine funnel skew the sf10 probe measured at 2.3x — for "
-    "2x stage-2 cosines (~n·2C/K, still never n·C); the top-2 coarse "
-    "selection is a zero-shuffle map-side fold over the broadcast "
-    "centroid array.  Every fine centroid is "
+    "2x stage-2 cosines (~n·2C/K, still never n·C).  Every fine centroid is "
     "pre-assigned to its nearest coarse cell (C×K metadata-sized work); "
     "at corpus sizes where the C-row fine table outgrows broadcast "
     "comfort, stage 2's broadcast becomes a co_id-keyed shuffle join — "
@@ -2170,17 +2077,15 @@ FROM assign a LEFT JOIN dropped d ON d.vec_id = a.vec_id
     "(two_level_index CASE rule, replayed by the oracle) — a "
     "colinear-but-scaled duplicate centroid beating the self-pair by an "
     "ulp can therefore never orphan a cell and silently drop rows "
-    "(round-7 ADVICE fix).  Both argmax "
-    "stages are scalar max_by hash aggregates (map-side combine, one "
-    "slim row per vector through each shuffle); the vector is re-attached "
-    "once by a uniform vec_id join between the stages.  Oracle replays "
+    "(round-7 ADVICE fix).  Both argmax stages run as Arrow GEMMs "
+    "(two_level_assign) and the winner's cent_sim is re-scored with the "
+    "exact fold.  Oracle replays "
     "coarse assignment, fine-within-coarse assignment, and the drop rule "
     "with the identical fold order and tie-breaks.  Hash-gate residual: "
     "the arrow index kernel's GEMM dots sum in a different order than "
     "the oracle's fold — a sub-1e-16-relative near-tie in the C×K "
     "fine→coarse argmax could shift a cell (two_level_index docstring; "
-    "1e-14 parity pinned, one-time arrow-vs-fold spot-check advised on "
-    "large generated corpora before trusting a hash gate).",
+    "parity on 1e-14 near-ties pinned in tests).",
 )
 def dedup_semantic_2level(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_http_full_cache_connector_spark.operators.similarity import (
@@ -2405,73 +2310,21 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _semantic_prune(
-    emb: DataFrame, assign: DataFrame, *, kernel: str = "arrow"
-) -> DataFrame:
+def _semantic_prune(emb: DataFrame, assign: DataFrame) -> DataFrame:
     """Shared SemDeDup within-cell drop rule over an ``assign`` relation
     ``(vec_id, cell_id, cent_sim)`` (persisted by the caller).
 
-    ``kernel="arrow"`` (default since the round-8 sf100 profile) computes
-    every cell's pairwise-cosine block as ONE numpy GEMM inside
-    ``applyInPandas`` grouped on cell_id — the fold form below evaluates
-    n·B pair cosines on the interpreted HOF path (CodegenFallback) and
-    was the dominant residual of dedup_semantic_2level at sf100 (305 s
-    total).  The earlier-rule and drop decision use the EXACT ``cent_sim``
-    values the assignment emitted (fold-re-scored, bit-identical to the
-    SQL twin); only the ≥ ε pair comparison rides numpy doubles, whose
-    few-ulp difference from the fold matters only for a pair sitting
-    within ~1e-15 of the threshold.  Cell blocks are B²-bounded (B=64
-    target members; the flat baseline's √n cells stay comfortably in a
-    task).  The ``"fold"`` kernel is the pure-JVM reference: slim id-pair
-    self-join on cell_id ordered by (cent_sim ASC, vec_id), vectors
-    re-attached by two uniform vec_id joins for the epsilon check."""
-    if kernel == "arrow":
-        return _semantic_prune_arrow(emb, assign)
-    if kernel != "fold":  # pragma: no cover
-        raise ValueError(f"kernel must be 'arrow' or 'fold', got {kernel}")
-    from flink_http_full_cache_connector_spark.functions.vectors import (
-        cosine_with_norms,
-        norm,
-    )
-
-    u = assign.select(
-        "cell_id", F.col("vec_id").alias("uid"), F.col("cent_sim").alias("us")
-    )
-    v = assign.select(
-        "cell_id", F.col("vec_id").alias("vid"), F.col("cent_sim").alias("vs")
-    )
-    earlier = (F.col("us") < F.col("vs")) | (
-        (F.col("us") == F.col("vs")) & (F.col("uid") < F.col("vid"))
-    )
-    pairs = u.join(v, "cell_id").where(earlier).select("uid", "vid")
-    ea = emb.select(
-        F.col("vec_id").alias("uid"), as_double(F.col("embedding")).alias("uv")
-    ).withColumn("un", norm(F.col("uv")))
-    eb = emb.select(
-        F.col("vec_id").alias("vid"), as_double(F.col("embedding")).alias("vv")
-    ).withColumn("vn", norm(F.col("vv")))
-    pair_sim = cosine_with_norms(F.col("uv"), F.col("vv"), F.col("un"), F.col("vn"))
-    dropped = (
-        pairs.join(ea, "uid")
-        .join(eb, "vid")
-        .where(pair_sim >= SEMANTIC_DUP_THRESHOLD)
-        .select(F.col("vid").alias("vec_id"))
-        .distinct()
-        .withColumn("is_kept", F.lit(False))
-    )
-    return (
-        assign.join(dropped, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.col("cell_id").cast("int").alias("cell_id"),
-            trunc6(F.col("cent_sim")).alias("cent_sim"),
-            F.coalesce(F.col("is_kept"), F.lit(True)).alias("is_kept"),
-        )
-    )
-
-
-def _semantic_prune_arrow(emb: DataFrame, assign: DataFrame) -> DataFrame:
-    """Arrow kernel for :func:`_semantic_prune` — see its docstring."""
+    Every cell's pairwise-cosine block is ONE numpy GEMM inside
+    ``applyInPandas`` grouped on cell_id — the expression form (id-pair
+    self-join + fold cosine per pair) evaluated n·B pair cosines on the
+    interpreted HOF path (CodegenFallback) and was the dominant residual
+    of dedup_semantic_2level at sf100 (305 s total).  The earlier-rule
+    and drop decision use the EXACT ``cent_sim`` values the assignment
+    emitted (fold-re-scored, bit-identical to the SQL twin); only the ≥ ε
+    pair comparison rides numpy doubles, whose few-ulp difference from
+    the oracle's sequential fold matters only for a pair sitting within
+    ~1e-15 of the threshold.  Cell blocks are B²-bounded (B=64 target
+    members; the flat baseline's √n cells stay comfortably in a task)."""
     import numpy as np
     import pandas as pd
 

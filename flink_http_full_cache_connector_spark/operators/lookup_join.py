@@ -27,8 +27,6 @@ def lookup_join(
     cache: DataFrame,
     on: str | Column | Sequence[str] | list[tuple[str, str]],
     how: str = "left",
-    *,
-    broadcast_cache: bool = True,
 ) -> DataFrame:
     """Join a probe DataFrame against the cached dimension snapshot.
 
@@ -41,13 +39,13 @@ def lookup_join(
     reach for first; passed through unchanged).
 
     ``how``: ``"inner"`` (B1) or ``"left"`` (B2).  The dimension side is
-    broadcast unless ``broadcast_cache=False`` (a dimension too big to
-    broadcast breaks the reference's own memory contract too).
+    always broadcast: the reference's memory contract is that the whole
+    dimension fits in memory next to the probe.
     """
     if how not in ("inner", "left", "left_outer", "leftouter"):
         raise ValueError(f"lookup_join supports inner/left, got {how!r}")
 
-    dim = F.broadcast(cache) if broadcast_cache else cache
+    dim = F.broadcast(cache)
 
     if isinstance(on, str):
         return probe.join(dim, on=on, how=how)
@@ -80,7 +78,6 @@ def observed_lookup_join(
     how: str = "left",
     *,
     observation,
-    broadcast_cache: bool = True,
 ) -> DataFrame:
     """:func:`lookup_join` + cache hit-rate metrics via ``df.observe``.
 
@@ -149,7 +146,7 @@ def observed_lookup_join(
         )
     else:
         marked = cache.withColumn(_HIT_MARKER, F.lit(1))
-    joined = lookup_join(probe, marked, on, how, broadcast_cache=broadcast_cache)
+    joined = lookup_join(probe, marked, on, how)
     hit = F.when(F.col(_HIT_MARKER) == 1, 1).otherwise(0)
     probe_row = F.when(
         (F.col(_HIT_MARKER) == 1) | F.col(_HIT_MARKER).isNull(), 1

@@ -174,7 +174,6 @@ def two_level_index(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "arrow",
 ) -> tuple[DataFrame, DataFrame]:
     """``(coarse, fine_grouped)`` for two-level (coarse-quantizer)
     assignment — shared by ``sim_ann_ivf_2level`` and
@@ -187,32 +186,26 @@ def two_level_index(
     outgrows broadcast comfort the consumer joins it on co_id as a
     shuffle join instead (same plan shape).
 
-    ``kernel="arrow"`` (default since the round-10 sf100 phase profile):
-    the C×K fine→coarse cosines are NOT metadata-sized work — C·K =
+    The C×K fine→coarse cosines are NOT metadata-sized work — C·K =
     C^1.5 grows as n^1.5 under the C = n/B sizing (5.5 M interpreted
-    HOF folds at sf100, 175 M at sf1000), and the profile measured this
-    one build step at 29.7 s of dedup_semantic_2level's sf100 wall —
-    13.5×/decade, THE super-linear phase of the whole family (assign
-    3.8×, prune 5.7×).  The selection therefore runs through
+    HOF folds at sf100, 175 M at sf1000), and the round-10 profile
+    measured this one build step at 29.7 s of dedup_semantic_2level's
+    sf100 wall — 13.5×/decade, THE super-linear phase of the whole
+    family.  The selection therefore runs through
     :func:`flat_assign_arrow` (one GEMM per Arrow batch against the
-    K×dim coarse matrix — K stays metadata-sized), with the identical
-    tie rule (first argmax over co_id-ascending = max_by(struct(sim,
-    -co_id))).  ``kernel="fold"`` keeps the pure-JVM broadcast-join +
-    max_by expression pipeline for cross-checks (kernels-agree test in
-    tests/test_semantic_dedup.py).
+    K×dim coarse matrix — K stays metadata-sized), with the tie rule
+    the SQL twins replay (first argmax over co_id-ascending =
+    max_by(struct(sim, -co_id))).
 
     Argmax-parity residual (round-10 ADVICE): the GEMM computes each
     fine→coarse dot in a different summation order than the sequential
     fold the SQL oracles replay, so two coarse candidates whose cosines
-    differ by less than GEMM-vs-fold noise (~1e-16 relative) could in
+    differ by less than that summation noise (~1e-16 relative) could in
     principle argmax differently and shift a fine centroid's cell —
     value-exact hash gates downstream would then mismatch even though
-    both assignments are "correct".  Parity on engineered 1e-14
-    near-ties is pinned (tests/test_semantic_dedup.py); for large
-    GENERATED corpora where a sub-1e-14 tie is conceivable, run a
-    one-time arrow-vs-fold ``fine_grouped`` equality spot-check before
-    trusting a hash gate (the fold kernel is C·K interpreted folds —
-    expensive, but a once-per-corpus check, not a per-query cost).
+    both assignments are "correct".  Parity with a sequential-fold
+    reference on engineered 1e-14 near-ties is pinned
+    (tests/test_semantic_dedup.py).
 
     Fine centroid j < k IS coarse centroid j; its co_id is PINNED to j
     rather than argmaxed, so every coarse cell is non-empty by
@@ -222,10 +215,7 @@ def two_level_index(
     coarse cell j, and silently drop every vector whose stage-1 winner
     is j from two_level_assign's inner join on co_id (round-7 ADVICE).
     The SQL twins replay the same CASE rule."""
-    from flink_http_full_cache_connector_spark.functions.vectors import (
-        cosine_with_norms,
-        norm,
-    )
+    from flink_http_full_cache_connector_spark.functions.vectors import norm
 
     coarse = emb.where(F.col(id_col) < k).select(
         F.col(id_col).alias("co_id"), as_double(F.col(vec_col)).alias("qv")
@@ -233,28 +223,14 @@ def two_level_index(
     fine = emb.where(F.col(id_col) < cells).select(
         F.col(id_col).alias("cent_id"), as_double(F.col(vec_col)).alias("cv")
     ).withColumn("nc", norm(F.col("cv")))
-    if kernel == "arrow":
-        co_list = [
-            (int(r["co_id"]), list(r["qv"]))
-            for r in coarse.select("co_id", "qv").collect()  # K rows
-        ]
-        grouped = flat_assign_arrow(
-            fine.select(F.col("cent_id").alias("vec_id"), F.col("cv").alias("v")),
-            co_list,
-        ).select(F.col("vec_id").alias("cent_id"), F.col("cell_id").alias("co_id"))
-    elif kernel == "fold":
-        fsim = cosine_with_norms(
-            F.col("cv"), F.col("qv"), F.col("nc"), F.col("nq")
-        )
-        f_order = F.struct(F.col("sim"), (-F.col("co_id")).alias("neg"))
-        grouped = (
-            fine.join(F.broadcast(coarse))
-            .select("cent_id", "co_id", fsim.alias("sim"))
-            .groupBy("cent_id")
-            .agg(F.max_by(F.col("co_id"), f_order).alias("co_id"))
-        )
-    else:  # pragma: no cover
-        raise ValueError(f"kernel must be 'arrow' or 'fold', got {kernel}")
+    co_list = [
+        (int(r["co_id"]), list(r["qv"]))
+        for r in coarse.select("co_id", "qv").collect()  # K rows
+    ]
+    grouped = flat_assign_arrow(
+        fine.select(F.col("cent_id").alias("vec_id"), F.col("cv").alias("v")),
+        co_list,
+    ).select(F.col("vec_id").alias("cent_id"), F.col("cell_id").alias("co_id"))
     fine_grouped = (
         grouped
         # a fine centroid that IS a coarse centroid anchors its own cell
@@ -270,7 +246,7 @@ def two_level_index(
     return coarse, fine_grouped
 
 
-def two_level_assign_arrow(
+def two_level_assign(
     emb: DataFrame,
     coarse: DataFrame,
     fine_grouped: DataFrame,
@@ -282,8 +258,9 @@ def two_level_assign_arrow(
     min_partitions: int | None = None,
     score: bool = True,
 ) -> DataFrame:
-    """``(id, cell_id, cent_sim)`` — the ARROW KERNEL for two-level
-    assignment, value-compatible with :func:`two_level_assign`.
+    """``(id, cell_id, cent_sim)`` via coarse→fine assignment: stage 1
+    picks the top ``coarse_probes`` coarse cells per vector, stage 2 the
+    best fine centroid among those cells' fine centroids.
     ``score=False`` (training loop only) skips the exact-fold re-score —
     the Lloyd means never read ``cent_sim``, and dropping it removes the
     fine-centroid broadcast join + fold from every iteration; the
@@ -293,7 +270,7 @@ def two_level_assign_arrow(
     ``aggregate``/``zip_with`` runs on Spark's INTERPRETED expression
     path — higher-order functions are CodegenFallback, so each of the
     n·(K + 2C/K) cosines costs hundreds of boxed lambda invocations.
-    Measured: the fold-shaped assignment alone took 279 s at generated
+    Measured: the expression-fold assignment alone took 279 s at generated
     sf100 (n=2M, C=31 250, K=176) with every plan shape already optimal —
     the arithmetic itself was the wall.  Here the SELECTION runs as
     Arrow-batched numpy (one ``mapInPandas`` GEMM against the broadcast
@@ -333,13 +310,22 @@ def two_level_assign_arrow(
     breaks to the lowest id deterministically.  The EMITTED ``cent_sim``
     is the exact fold re-score, and under this engine's ANSI mode a
     zero-norm probe (or centroid) makes that division fail the job with
-    DIVIDE_BY_ZERO — exactly what the pure-fold twin does at its first
-    cosine.  Net behavior, pinned by
-    ``test_zero_vector_behavior_pinned``: both kernels FAIL FAST on
-    zero vectors rather than silently scoring them; only the
-    selection-only training kernel (:func:`flat_assign_arrow`) tolerates
-    them.  Real embeddings are non-zero; the gates hash-verify both
-    kernels on every driver scale.
+    DIVIDE_BY_ZERO — exactly what the SQL twin's fold cosine does.  Net
+    behavior, pinned by ``test_zero_vector_behavior_pinned``: the scored
+    assignment FAILS FAST on zero vectors rather than silently scoring
+    them; only the selection-only training kernel
+    (:func:`flat_assign_arrow`) tolerates them.  Real embeddings are
+    non-zero.
+
+    ``coarse_probes=2`` is the BALANCED assignment (round-7 verdict #2):
+    the sf10 sweep measured the coarse→fine funnel skewing fine cells
+    2.3× (a popular coarse cell concentrates every vector it wins into
+    its own C/K fine cells), and that skew was the residual super-unit
+    ratio of dedup_semantic_2level.  Multi-probing the top-2 coarse cells
+    lets stage 2 pick the best fine centroid across BOTH cells' fine
+    sets — assignment closer to the flat argmax, cells materially more
+    even — for 2× stage-2 cosines (still ~n·2C/K, never n·C).  The SQL
+    twin replays it as the rn<=2 window over the identical sims.
 
     ``carry_vec=True`` additionally emits the (double-widened) vector as
     ``v`` — free, since the exact-fold re-score already re-attached it;
@@ -406,7 +392,9 @@ def two_level_assign_arrow(
             # cell: nothing to emit
             out = pd.DataFrame({c: [] for c in cols}).astype(cols)
             if carry_through:
-                out["v"] = []
+                # object dtype: an empty float64 column does not convert
+                # to Arrow list<double>
+                out["v"] = pd.Series([], dtype=object)
             return out
         fine_pdf = fine_pdf.sort_values("cent_id")
         ids = fine_pdf["cent_id"].to_numpy(dtype=np.int64)
@@ -488,7 +476,7 @@ def flat_assign_arrow(
 ) -> DataFrame:
     """``(vec_id, cell_id, v)`` — Arrow GEMM flat nearest-centroid
     assignment against a driver-side centroid list; the TRAINING-loop
-    sibling of :func:`two_level_assign_arrow` (round-8 verdict #2: Lloyd's
+    sibling of :func:`two_level_assign` (round-8 verdict #2: Lloyd's
     per-iteration ``ivf_assign`` ran n_s·K interpreted cosine folds — the
     570 s wall of the trained two-level index at sf100).  One map-only
     pass: the K×dim centroid matrix rides the task closure (the broadcast
@@ -506,7 +494,7 @@ def flat_assign_arrow(
     0.0 against every centroid and lands deterministically in the lowest
     cell id.  This is the ONE kernel that tolerates zero vectors — it
     emits no cosine, only the assignment; every kernel that emits a
-    cosine (the fold twins, two_level_assign's re-scored output) fails
+    cosine (every fold cosine, two_level_assign's re-scored output) fails
     fast under ANSI with DIVIDE_BY_ZERO instead (pinned by
     ``test_zero_vector_behavior_pinned``).  Training therefore never
     drops or misscores a degenerate row, and serve paths refuse them
@@ -619,209 +607,6 @@ def lloyd_cell_means_keep(
     )
 
 
-def two_level_assign(
-    emb: DataFrame,
-    coarse: DataFrame,
-    fine_grouped: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    coarse_probes: int = 1,
-    kernel: str = "arrow",
-    carry_vec: bool = False,
-    min_partitions: int | None = None,
-    score: bool = True,
-) -> DataFrame:
-    """``(id, cell_id, cent_sim)`` via coarse→fine assignment.
-    ``carry_vec`` / ``min_partitions`` / ``score`` are arrow-kernel
-    training-loop knobs (see :func:`two_level_assign_arrow`); the fold
-    reference kernel does not support them.
-
-    ``kernel="arrow"`` (the default since the round-8 sf100 profile) runs
-    the selection as Arrow-batched numpy GEMMs and re-scores the winner
-    with the exact fold — see :func:`two_level_assign_arrow`.  The
-    ``"fold"`` kernel below is the pure-JVM-expression reference: same
-    values, but every cosine runs on the interpreted HOF path
-    (CodegenFallback), measured 279 s for assignment alone at generated
-    sf100 vs ~tens of seconds for the Arrow kernel — keep it for oracle
-    cross-checks and environments without Arrow workers.
-
-    Fold-kernel dataflow: stage 1
-    picks the coarse cell (n·K scalar rows, map-side partial ``max_by``),
-    the vector is re-attached once by a uniform id join, stage 2 scores
-    only the winning coarse cell's fine centroids (≈ n·C/K rows).  Both
-    shuffles carry one slim row per vector; no stage ever materializes
-    n×C.
-
-    ``coarse_probes=2`` is the BALANCED assignment (round-7 verdict #2):
-    the sf10 sweep measured the coarse→fine funnel skewing fine cells
-    2.3× (a popular coarse cell concentrates every vector it wins into
-    its own C/K fine cells), and that skew was the residual super-unit
-    ratio of dedup_semantic_2level.  Multi-probing the top-2 coarse cells
-    lets stage 2 pick the best fine centroid across BOTH cells' fine
-    sets — assignment closer to the flat argmax, cells materially more
-    even — for 2× stage-2 cosines (still ~n·2C/K, never n·C).  The top-2
-    selection runs entirely map-side: the K coarse centroids fold into a
-    single broadcast array row and a transform+aggregate expression keeps
-    the running (best, second) per vector — ZERO stage-1 shuffle (the
-    max_by path pays one slim exchange), no window over n·K rows.  The
-    SQL twin replays it as the rn<=2 window over the identical sims."""
-    if kernel == "arrow":
-        return two_level_assign_arrow(
-            emb,
-            coarse,
-            fine_grouped,
-            id_col=id_col,
-            vec_col=vec_col,
-            coarse_probes=coarse_probes,
-            carry_vec=carry_vec,
-            min_partitions=min_partitions,
-            score=score,
-        )
-    if kernel != "fold":  # pragma: no cover
-        raise ValueError(f"kernel must be 'arrow' or 'fold', got {kernel}")
-    if carry_vec or min_partitions is not None or not score:  # pragma: no cover
-        raise ValueError(
-            "carry_vec/min_partitions/score are arrow-kernel training knobs"
-        )
-    from flink_http_full_cache_connector_spark.functions.vectors import (
-        cosine_with_norms,
-        norm,
-    )
-
-    v = widen(emb).select(
-        F.col(id_col), as_double(F.col(vec_col)).alias("v")
-    ).withColumn("nv", norm(F.col("v")))
-    if coarse_probes == 1:
-        s1 = cosine_with_norms(F.col("v"), F.col("qv"), F.col("nv"), F.col("nq"))
-        s1_order = F.struct(F.col("sim"), (-F.col("co_id")).alias("neg"))
-        vco = (
-            v.join(F.broadcast(coarse.select("co_id", "qv", "nq")))
-            .select(id_col, "co_id", s1.alias("sim"))
-            .groupBy(id_col)
-            .agg(F.max_by(F.col("co_id"), s1_order).alias("co_id"))
-        )
-        staged = vco.join(v, id_col)
-    elif coarse_probes == 2:
-        # one array row (collect_list is a K-row agg — metadata-sized, the
-        # same class as the coarse broadcast itself), cross-joined broadcast
-        carr = coarse.agg(
-            F.collect_list(F.struct("co_id", "qv", "nq")).alias("cents")
-        )
-        scored_arr = F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                c["co_id"].alias("co_id"),
-                cosine_with_norms(
-                    F.col("v"), c["qv"], F.col("nv"), c["nq"]
-                ).alias("sim"),
-            ),
-        )
-        init = F.struct(
-            F.lit(-10.0).alias("s1"),
-            F.lit(2**62).cast("long").alias("i1"),
-            F.lit(-10.0).alias("s2"),
-            F.lit(2**62).cast("long").alias("i2"),
-        )
-
-        def _step(acc: Column, x: Column) -> Column:
-            beats1 = (x["sim"] > acc["s1"]) | (
-                (x["sim"] == acc["s1"]) & (x["co_id"] < acc["i1"])
-            )
-            beats2 = (x["sim"] > acc["s2"]) | (
-                (x["sim"] == acc["s2"]) & (x["co_id"] < acc["i2"])
-            )
-            return (
-                F.when(
-                    beats1,
-                    F.struct(
-                        x["sim"].alias("s1"),
-                        x["co_id"].alias("i1"),
-                        acc["s1"].alias("s2"),
-                        acc["i1"].alias("i2"),
-                    ),
-                )
-                .when(
-                    beats2,
-                    F.struct(
-                        acc["s1"].alias("s1"),
-                        acc["i1"].alias("i1"),
-                        x["sim"].alias("s2"),
-                        x["co_id"].alias("i2"),
-                    ),
-                )
-                .otherwise(acc)
-            )
-
-        top2 = F.aggregate(scored_arr, init, _step)
-        staged = (
-            v.crossJoin(F.broadcast(carr))
-            .withColumn("t2", top2)
-            .select(
-                id_col,
-                "v",
-                "nv",
-                F.explode(
-                    F.array(F.col("t2.i1"), F.col("t2.i2"))
-                ).alias("co_id"),
-            )
-        )
-    else:  # pragma: no cover — 1 and 2 are the supported shapes
-        raise ValueError(f"coarse_probes must be 1 or 2, got {coarse_probes}")
-    # stage 2 as a PER-CELL ARRAY FOLD, not a row join (round-8 sf100
-    # sweep): the join form materialized n×probes·C/K joined rows, each
-    # COPYING the vector array through the join output — at generated
-    # sf100 (n=2M, C/K=178, dim=64) that is ~350 GB of row memcpy and it
-    # dominated every consumer of this function (corpus_prune_prototypes
-    # measured 1016 s).  Here the fine centroids pre-group into ONE array
-    # row per coarse cell (K rows total — same bytes as the old broadcast,
-    # different shape), the probe keeps n×probes rows end-to-end, and the
-    # in-cell argmax folds over the array with the house (sim, lower-id)
-    # comparison.  Values are IEEE-identical to the join form: the same
-    # cosine_with_norms expression per fine centroid, and
-    # fold-within-cell + max_by-across-cells is the same lexicographic
-    # max the single max_by computed (associativity of max).  At corpus
-    # sizes where C×dim outgrows broadcast comfort the fg_arr join
-    # becomes a co_id-keyed shuffle join — same plan shape.
-    fg_arr = fine_grouped.groupBy("co_id").agg(
-        F.collect_list(F.struct("cent_id", "cv", "nc")).alias("fines")
-    )
-    scored_fines = F.transform(
-        F.col("fines"),
-        lambda c: F.struct(
-            c["cent_id"].alias("cent_id"),
-            cosine_with_norms(
-                F.col("v"), c["cv"], F.col("nv"), c["nc"]
-            ).alias("sim"),
-        ),
-    )
-    b_init = F.struct(
-        F.lit(-10.0).alias("s"), F.lit(2**62).cast("long").alias("i")
-    )
-
-    def _best(acc: Column, x: Column) -> Column:
-        wins = (x["sim"] > acc["s"]) | (
-            (x["sim"] == acc["s"]) & (x["cent_id"] < acc["i"])
-        )
-        return F.when(
-            wins, F.struct(x["sim"].alias("s"), x["cent_id"].alias("i"))
-        ).otherwise(acc)
-
-    best = F.aggregate(scored_fines, b_init, _best)
-    return (
-        staged.join(F.broadcast(fg_arr), "co_id")
-        .withColumn("b", best)
-        .groupBy(id_col)
-        .agg(
-            F.max_by(
-                F.col("b.i"),
-                F.struct(F.col("b.s"), (-F.col("b.i")).alias("neg")),
-            ).alias("cell_id"),
-            F.max(F.col("b.s")).alias("cent_sim"),
-        )
-    )
-
-
 def ivf_train(
     corpus: DataFrame,
     k: int = NUM_CENTROIDS,
@@ -830,7 +615,6 @@ def ivf_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     sample_mod: int | None = None,
-    kernel: str = "arrow",
     min_partitions: int | None = None,
 ) -> DataFrame:
     """Lloyd's k-means for IVF centroids.
@@ -838,28 +622,19 @@ def ivf_train(
     samples (value-invariant; per-stage constants only — round-10
     verdict #6).
 
-    Seeded deterministically (first ``k`` vectors by id).
-    ``kernel="arrow"`` (default since the round-9 profile — round-8
-    verdict #2) runs each iteration as one Arrow GEMM assignment
-    (:func:`flat_assign_arrow`: K×dim matrix in the task closure, no
-    shuffle, no interpreted fold — the fold path's n_s·K CodegenFallback
-    cosines were the 570 s wall of the trained two-level index at sf100)
-    feeding one grouped Arrow mean (:func:`lloyd_cell_means`: n_s slim
-    vector rows shuffled once, deterministic id-sorted reduction), then
-    collects the k mean rows and rebuilds the centroid literals.
-    Centroid values differ from the fold path in final ulps (GEMM vs
-    sequential sums) — legitimate because Lloyd means have no bit-stable
-    SQL replay anywhere: every consumer is contract-gated and recall is
-    pinned by tests.
-
-    ``kernel="fold"`` is the pure-JVM reference: broadcast the current
-    centroids as a literal local relation, assign map-side
-    (``ivf_assign``), posexplode the assigned vectors and
-    partial-aggregate per (cell, dim) — the shuffle carries ``k*dim``
-    partial sums, never vectors — then collect the ``k*dim`` means.
-    Either way centroids are O(k·dim) metadata, independent of corpus
+    Seeded deterministically (first ``k`` vectors by id).  Each
+    iteration is one Arrow GEMM assignment (:func:`flat_assign_arrow`:
+    K×dim matrix in the task closure, no shuffle, no interpreted fold —
+    an expression-fold assignment's n_s·K CodegenFallback cosines were
+    the 570 s wall of the trained two-level index at sf100, round-8
+    verdict #2) feeding one grouped Arrow mean (:func:`lloyd_cell_means`:
+    n_s slim vector rows shuffled once, deterministic id-sorted
+    reduction), then collects the k mean rows and rebuilds the centroid
+    literals.  Centroids are O(k·dim) metadata, independent of corpus
     size, so the per-iteration collect is the scale-correct pattern
-    (Spark MLlib's KMeans does the same).
+    (Spark MLlib's KMeans does the same).  GEMM sums have no bit-stable
+    SQL replay, and neither do Lloyd means anywhere: every consumer is
+    contract-gated and recall is pinned by tests.
 
     ``sample_mod=N`` trains on the deterministic 1/N md5-bucket subsample of
     the corpus (same bucketing family as sample_hash_split) instead of
@@ -868,8 +643,6 @@ def ivf_train(
     each iteration's scan+shuffle shrinks by N×.  Final cell assignment
     (done by the caller) always covers the full corpus.
     """
-    if kernel not in ("arrow", "fold"):  # pragma: no cover
-        raise ValueError(f"kernel must be 'arrow' or 'fold', got {kernel}")
     spark = corpus.sparkSession
     training = corpus
     if sample_mod is not None:
@@ -888,40 +661,17 @@ def ivf_train(
     cents: list[tuple[int, list[float]]] = [
         (int(r[0]), [float(x) for x in r[1]]) for r in seed
     ]
-    dim = len(cents[0][1])
-    schema = "cent_id long, cv array<double>"
-    if kernel == "arrow":
-        tv = widen(training, min_partitions).select(
-            F.col(id_col).cast("long").alias("vec_id"),
-            as_double(F.col(vec_col)).alias("v"),
-        )
-        for _ in range(iters):
-            assign = flat_assign_arrow(tv, cents)
-            mrows = lloyd_cell_means(assign).collect()
-            by_mean = {
-                int(r["cent_id"]): [float(x) for x in r["cv"]] for r in mrows
-            }
-            # empty cells keep their previous centroid
-            cents = [(cid, by_mean.get(cid, cv)) for cid, cv in cents]
-        return spark.createDataFrame(cents, schema)
+    tv = widen(training, min_partitions).select(
+        F.col(id_col).cast("long").alias("vec_id"),
+        as_double(F.col(vec_col)).alias("v"),
+    )
     for _ in range(iters):
-        cent_df = spark.createDataFrame(cents, schema)
-        assign = ivf_assign(training, cent_df, id_col=id_col, vec_col=vec_col)
-        means = (
-            assign.select("cell_id", F.posexplode(F.col("v")).alias("d", "x"))
-            .groupBy("cell_id", "d")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        by_cell: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cell.setdefault(int(r.cell_id), {})[int(r.d)] = float(r.m)
+        assign = flat_assign_arrow(tv, cents)
+        mrows = lloyd_cell_means(assign).collect()
+        by_mean = {int(r["cent_id"]): [float(x) for x in r["cv"]] for r in mrows}
         # empty cells keep their previous centroid
-        cents = [
-            (cid, [by_cell[cid][i] for i in range(dim)] if cid in by_cell else cv)
-            for cid, cv in cents
-        ]
-    return spark.createDataFrame(cents, schema)
+        cents = [(cid, by_mean.get(cid, cv)) for cid, cv in cents]
+    return spark.createDataFrame(cents, "cent_id long, cv array<double>")
 
 
 def _ivf_trained_parts(
@@ -1670,12 +1420,11 @@ FROM ranked WHERE rank <= {k}
     "both assignment stages, the probe walk, and the rank with identical "
     "fold order and tie-breaks.  Plan: two slim per-vector shuffles for "
     "the index, broadcast-sized probe tables, one cell_id candidate "
-    "join.  Hash-gate residual: the default arrow index kernel computes "
+    "join.  Hash-gate residual: the index build computes "
     "the C×K fine→coarse dots by GEMM, whose summation order differs "
     "from the oracle's sequential fold — near-ties below ~1e-16 "
     "relative could argmax differently (see two_level_index docstring; "
-    "1e-14 near-tie parity is pinned, large generated corpora should "
-    "one-time spot-check arrow-vs-fold fine_grouped equality).",
+    "1e-14 near-tie parity is pinned).",
 )
 def sim_ann_ivf_2level(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
@@ -1774,7 +1523,7 @@ def _two_level_assign_carry_v(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """``(co_id, vec_id, cell_id, v)`` — the INDEX-BUILD variant of
-    :func:`two_level_assign_arrow` (coarse_probes=1): identical cell
+    :func:`two_level_assign` (coarse_probes=1): identical cell
     SELECTION (same stage-1 argsort, same cogrouped stage-2 argmax, same
     tie rule), but the vector rides through stage 2 and out, and the
     ``cent_sim`` re-score / per-vector argmax / vector re-join are all
@@ -1866,7 +1615,7 @@ def two_level_index_save(
       ONE coarse cell and row-groups to its nprobe fine cells.
 
     Assignment runs through :func:`_two_level_assign_carry_v` — selection
-    identical to the oracle-gated :func:`two_level_assign` kernel, with
+    identical to the oracle-gated :func:`two_level_assign`, with
     the vector carried in-band so the build pays exactly ONE vector
     shuffle (the cogroup's co_id exchange, which is also the write
     partitioning); every subsequent probe reads ~nprobe·(n/C) rows."""
@@ -2771,76 +2520,50 @@ def sub_sqdist(a: Column, b: Column, m: int) -> Column:
     )
 
 
-def pq_encode(
-    corpus: DataFrame, codebook: DataFrame, *, kernel: str = "arrow"
-) -> DataFrame:
+def pq_encode(corpus: DataFrame, codebook: DataFrame) -> DataFrame:
     """(vec_id, code_0..code_{M-1}): nearest codeword per subspace.
 
-    ``kernel="arrow"`` (default since the round-9 sf100 profile) runs the
-    per-subspace argmin as one Arrow-batched numpy pass — and, unlike the
-    selection-only GEMM kernels, it is **bit-identical** to the fold by
-    construction: the squared distance accumulates LEFT-TO-RIGHT over the
-    subspace dims with one vectorized ``acc + d*d`` per dim, the exact
-    IEEE float64 sequence :func:`sqdist` folds, so the argmin decides on
-    the same bits and the emitted codes cannot diverge (no re-score step
-    needed; the full SQL oracle stays exact).  The pass is map-only —
-    the PQ_K×dim codebook rides the task closure and NO shuffle remains
-    (the fold path paid one slim groupBy(vec_id) exchange).  At sf100 the
-    fold path's n·PQ_K·PQ_M interpreted sub-folds were the ADC stage's
-    wall (round-8 verdict #3).
+    The per-subspace argmin runs as one Arrow-batched numpy pass, and,
+    unlike the selection-only GEMM kernels, it decides on the same bits
+    as the SQL oracle: the squared distance accumulates LEFT-TO-RIGHT
+    over the subspace dims with one vectorized ``acc + d*d`` per dim, the
+    exact IEEE float64 sequence :func:`sqdist` folds, so the emitted codes
+    cannot diverge (no re-score step needed; the full SQL oracle stays
+    exact).  Ties go to the lowest codeword id (``min_by(struct(d, j))``).
+    The pass is map-only — the PQ_K×dim codebook rides the task closure
+    and no shuffle remains.  At sf100 an expression form's n·PQ_K·PQ_M
+    interpreted sub-folds were the ADC stage's wall (round-8 verdict #3).
+    """
+    import numpy as np
+    import pandas as pd
 
-    ``kernel="fold"`` is the pure-JVM-expression reference: codebook
-    (PQ_K rows) broadcasts; per (vector, codeword) all M subspace
-    distances are computed map-side, then ONE groupBy(vec_id) with M
-    ``min_by`` aggregates picks every subspace's code — the shuffle
-    carries one row per vector (scalar code columns, no arrays)."""
-    c = widen(corpus).select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
+    rows = sorted(
+        (int(r["j"]), np.asarray(r["w"], dtype=np.float64))
+        for r in codebook.select("j", "w").collect()
     )
-    if kernel == "arrow":
-        import numpy as np
-        import pandas as pd
+    js = np.array([j for j, _ in rows], dtype=np.int32)
+    W = np.stack([w for _, w in rows])  # (PQ_K, dim), j-ascending
 
-        rows = sorted(
-            (int(r["j"]), np.asarray(r["w"], dtype=np.float64))
-            for r in codebook.select("j", "w").collect()
-        )
-        js = np.array([j for j, _ in rows], dtype=np.int32)
-        W = np.stack([w for _, w in rows])  # (PQ_K, dim), j-ascending
+    def _enc(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.stack(pdf["v"].to_numpy())  # (b, dim)
+            out = {"vec_id": pdf["vec_id"].to_numpy()}
+            for m in range(PQ_M):
+                acc = np.zeros((len(pdf), W.shape[0]))
+                for i in range(m * PQ_SUB, (m + 1) * PQ_SUB):
+                    d = V[:, i : i + 1] - W[None, :, i][0]
+                    acc = acc + d * d
+                # first-min on j-ascending rows = min_by(struct(d, j))
+                out[f"code_{m}"] = js[np.argmin(acc, axis=1)]
+            yield pd.DataFrame(out)
 
-        def _enc(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf["v"].to_numpy())  # (b, dim)
-                out = {"vec_id": pdf["vec_id"].to_numpy()}
-                for m in range(PQ_M):
-                    acc = np.zeros((len(pdf), W.shape[0]))
-                    for i in range(m * PQ_SUB, (m + 1) * PQ_SUB):
-                        d = V[:, i : i + 1] - W[None, :, i][0]
-                        acc = acc + d * d
-                    # first-min on j-ascending rows = min_by(struct(d, j))
-                    out[f"code_{m}"] = js[np.argmin(acc, axis=1)]
-                yield pd.DataFrame(out)
-
-        schema = "vec_id long, " + ", ".join(
-            f"code_{m} int" for m in range(PQ_M)
-        )
-        return c.mapInPandas(_enc, schema)
-    if kernel != "fold":  # pragma: no cover
-        raise ValueError(f"kernel must be 'arrow' or 'fold', got {kernel}")
-    enc = c.join(F.broadcast(codebook)).select(
-        "vec_id",
-        "j",
-        *[sub_sqdist(F.col("v"), F.col("w"), m).alias(f"d_{m}") for m in range(PQ_M)],
-    )
-    return enc.groupBy("vec_id").agg(
-        *[
-            F.min_by("j", F.struct(F.col(f"d_{m}"), F.col("j")))
-            .cast("int")
-            .alias(f"code_{m}")
-            for m in range(PQ_M)
-        ]
+    schema = "vec_id long, " + ", ".join(f"code_{m} int" for m in range(PQ_M))
+    return (
+        widen(corpus)
+        .select("vec_id", as_double(F.col("embedding")).alias("v"))
+        .mapInPandas(_enc, schema)
     )
 
 
@@ -3133,8 +2856,8 @@ FROM ranked WHERE rank <= {TOP_K}
     "corpus size.  FULL SQL oracle (stronger than the contract form "
     "the trained variants need): both assignment stages, the probe "
     "walk, the per-subspace code argmins, and the fixed m-order ADC "
-    "fold replay exactly.  Plan: two slim max_by shuffles (index), one "
-    "min_by shuffle (codes), metadata-sized ADC table applied as a "
+    "fold replay exactly.  Plan: Arrow GEMM assignment (index), one "
+    "map-only Arrow pass (codes), metadata-sized ADC table applied as a "
     "literal-array lookup — candidate scoring stays map-side (plan pin "
     "in tests/test_plans.py).",
 )
@@ -3240,72 +2963,6 @@ def sim_ann_ivf_2level_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 PCA_ITERS = 12
 
 
-def _pca_xtxv(
-    base: DataFrame, v: list[float], *, kernel: str, with_trace: bool = False
-) -> tuple[list[float], float]:
-    """One power-iteration pass: ``u = XᵀXv`` (and optionally
-    ``trace(XᵀX)``) without forming the covariance matrix.
-
-    ``kernel="arrow"`` (default since the round-10 audit): each Arrow
-    batch contributes ONE partial row — ``u_b = V_bᵀ(V_b v)`` via two
-    BLAS GEMVs — and the ~(n/batch) dim-length partials sum on the
-    driver (metadata-sized).  The fold form below evaluates the n dot
-    products on the interpreted HOF path AND shuffles n·dim scalar rows
-    per pass through the posexplode — the exact pattern round 9 removed
-    from Lloyd training; at sf100 the 12-iteration train exceeded 590 s
-    (audit spot) where the GEMV form is seconds.  Both kernels are valid
-    under the query's CONTRACT gates (tolerance booleans — iterative
-    float sums have no bit-stable SQL replay; partial-sum order already
-    differed by partitioning in the fold form)."""
-    import numpy as np
-
-    if kernel == "arrow":
-        import pandas as pd
-
-        varr = np.asarray(v, dtype=np.float64)
-
-        def _p(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf["x"].to_numpy())
-                u_b = V.T @ (V @ varr)
-                sq = float((V * V).sum()) if with_trace else 0.0
-                yield pd.DataFrame({"u": [u_b.tolist()], "sq": [sq]})
-
-        parts = base.mapInPandas(_p, "u array<double>, sq double").collect()
-        u = np.zeros(len(v), dtype=np.float64)
-        tr = 0.0
-        for r in parts:
-            u += np.asarray(r["u"], dtype=np.float64)
-            tr += float(r["sq"])
-        return u.tolist(), tr
-    if kernel != "fold":  # pragma: no cover
-        raise ValueError(f"kernel must be 'arrow' or 'fold', got {kernel}")
-    vlit = F.array(*[F.lit(x) for x in v])
-    s = F.aggregate(
-        F.zip_with(F.col("x"), vlit, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
-    aggs = [F.sum(F.col("xd") * F.col("s")).alias("u")]
-    if with_trace:
-        aggs.append(F.sum(F.col("xd") * F.col("xd")).alias("sq"))
-    rows = (
-        base.select(F.posexplode(F.col("x")).alias("d", "xd"), s.alias("s"))
-        .groupBy("d")
-        .agg(*aggs)
-        .collect()
-    )
-    u = [0.0] * len(v)
-    tr = 0.0
-    for r in rows:
-        u[int(r["d"])] = float(r["u"])
-        if with_trace:
-            tr += float(r["sq"])
-    return u, tr
-
-
 def pca_gram(emb: DataFrame) -> tuple["object", int]:
     """(G = XᵀX as a numpy (dim, dim) array, n_vectors) in ONE corpus pass.
 
@@ -3378,48 +3035,26 @@ def pca_gram(emb: DataFrame) -> tuple["object", int]:
 
 
 def pca_power_train(
-    emb: DataFrame, iters: int = PCA_ITERS, *, kernel: str = "gram"
+    emb: DataFrame, iters: int = PCA_ITERS
 ) -> tuple[list[float], float]:
     """Leading right-singular vector of the (uncentered) embedding matrix by
-    power iteration on ``X^T X``.  ``kernel="gram"`` (default since r11)
-    collects the dim×dim Gram once (:func:`pca_gram`) and runs every
-    iteration as a driver-side matvec — one corpus pass total instead of
-    one per step.  ``kernel="arrow"``/``"fold"`` keep the pass-per-step
-    forms (see :func:`_pca_xtxv`); all kernels converge to the same
-    direction (the iteration is contractive; summation-order noise cannot
-    push them apart — pinned in tests) and are valid under the contract
-    gates.  Deterministic init: the all-ones direction.  Returns
-    (unit vector v, rayleigh quotient λ = v·(XᵀX)v ≈ top eigenvalue).
+    power iteration on ``X^T X``: the dim×dim Gram is collected once
+    (:func:`pca_gram`) and every iteration is a driver-side matvec — one
+    corpus pass total instead of one per step.  Deterministic init: the
+    all-ones direction.  Returns (unit vector v, rayleigh quotient
+    λ = v·(XᵀX)v ≈ top eigenvalue).
     """
-    if kernel == "gram":
-        import numpy as np
+    import numpy as np
 
-        G, _n = pca_gram(emb)
-        dim = G.shape[0]
-        v = np.full(dim, 1.0 / dim**0.5, dtype=np.float64)
-        lam = 0.0
-        for _ in range(iters):
-            u = G @ v
-            lam = float(v @ u)
-            v = u / float(np.sqrt(u @ u))
-        return v.tolist(), lam
-    dim = len(emb.select("embedding").first()[0])
-    v = [1.0 / dim**0.5] * dim
+    G, _n = pca_gram(emb)
+    dim = G.shape[0]
+    v = np.full(dim, 1.0 / dim**0.5, dtype=np.float64)
     lam = 0.0
-    base = widen(emb).select(as_double(F.col("embedding")).alias("x"))
-    if kernel == "arrow":
-        base = base.persist()  # 12 passes over the same slim relation
     for _ in range(iters):
-        u, _tr = _pca_xtxv(base, v, kernel=kernel)
-        lam = sum(vi * ui for vi, ui in zip(v, u))  # v·(XᵀX)v with unit v
-        n = sum(x * x for x in u) ** 0.5
-        v = [x / n for x in u]
-    if kernel == "arrow":
-        # fully consumed above (each _pca_xtxv collects); without this,
-        # every library/test caller outside bench.py's clearCache leaks
-        # one cached relation per invocation (round-10 ADVICE)
-        base.unpersist()
-    return v, lam
+        u = G @ v
+        lam = float(v @ u)
+        v = u / float(np.sqrt(u @ u))
+    return v.tolist(), lam
 
 
 @register(

@@ -23,6 +23,7 @@ from dataclasses import field as dataclass_field
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from flink_http_full_cache_connector_spark.http_client import (
@@ -78,19 +79,14 @@ def fetch_rows(
 
 
 def _local_relation(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
-    """Driver rows → LocalTableScan via Arrow; classic path as fallback.
-
-    ``dtype=object`` keeps int64 keys exact (no float64 round-trip for
-    columns containing NULLs).
-    """
-    try:
-        import pandas as pd
-
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        pdf = pd.DataFrame(rows, columns=[f.name for f in schema.fields], dtype=object)
-        return spark.createDataFrame(pdf, schema)
-    except Exception:
-        return spark.createDataFrame(rows, schema).coalesce(1)
+    """Driver rows → LocalTableScan through the same Arrow hand-off as
+    :func:`create_lookup_df`; no session conf is touched."""
+    arrow_schema = to_arrow_schema(schema, timestamp_utc=False)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(_timestamps_as_utc(table), schema)
 
 
 def _timestamps_as_utc(table: pa.Table) -> pa.Table:

@@ -333,16 +333,23 @@ def test_out_of_range_int_fails_with_the_reference_error(spark, http_server, rou
 
 
 def test_driver_load_leaves_session_conf_unchanged(spark, http_server):
-    """A library call must not flip session conf: the driver-route load
-    hands Spark an Arrow table without enabling Arrow for the session."""
+    """A library call must not flip session conf: the driver-route load and
+    the operators' driver-rows hand-off (``_local_relation``) give Spark an
+    Arrow table without enabling Arrow for the session."""
+    from flink_http_full_cache_connector_spark.sources.lookup import _local_relation
+
     key = "spark.sql.execution.arrow.pyspark.enabled"
     before = spark.conf.get(key, None)
     spark.conf.set(key, "false")
     try:
         df = create_lookup_df(spark, {"url": http_server.url}, USERS_SCHEMA)
+        rows = [tuple(r) for r in df.collect()]
+        local = _local_relation(spark, rows, USERS_SCHEMA)
         assert spark.conf.get(key) == "false"
         assert df.count() == 10
-        assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+        assert sorted(local.collect()) == sorted(df.collect())
+        for d in (df, local):
+            assert "LocalTableScan" in d._jdf.queryExecution().executedPlan().toString()
     finally:
         if before is None:
             spark.conf.unset(key)

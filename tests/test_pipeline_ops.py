@@ -710,75 +710,116 @@ def test_ann_ivf_pq_recall_vs_bruteforce_l2(spark):
     assert avg >= 0.25, f"IVF-PQ recall@10 {avg:.2f}"
 
 
+def _fold_dot(a, b):
+    """Sequential left-to-right dot product: the IEEE float64 sequence the
+    ``functions.vectors`` folds and the DuckDB oracles run."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + float(x) * float(y)
+    return acc
+
+
+def _fold_cos(a, b):
+    import math
+
+    return _fold_dot(a, b) / (
+        math.sqrt(_fold_dot(a, a)) * math.sqrt(_fold_dot(b, b))
+    )
+
+
+def _md5_prefix(col, n):
+    """First ``n`` md5 hex chars of ``col`` as a BIGINT."""
+    return F.conv(F.substring(F.md5(col), 1, n), 16, 10).cast("long")
+
+
+_SHINGLE_EDGE_DOCS = [
+    (100001, "\ta b\tc  d\ne "),  # leading tab survives trim
+    (100002, ""),                 # empty
+    (100003, None),               # null text
+    (100004, "one two"),          # too short for a 3-gram
+    (100005, " x y z x y z x y z "),  # repeated shingles dedup
+]
+
+
 def test_shingle_table_arrow_identical_to_fold(spark):
     """The Arrow shingle kernel (python tokenize + md5) must reproduce the
-    HOF expression pipeline EXACTLY — same shingle strings, same h/fp
-    hashes, same first-occurrence dedup — including whitespace edge cases
-    (F.trim is space-only; tabs/newlines are delimiters, not trim chars)."""
+    Spark expression reference ``explode(word_shingles) + md5`` EXACTLY —
+    same shingle strings, same fp hashes, same first-occurrence dedup —
+    including whitespace edge cases (F.trim is space-only; tabs/newlines
+    are delimiters, not trim chars)."""
     from flink_http_full_cache_connector_spark.operators.dedup import (
         _shingle_table,
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    edge = spark.createDataFrame(
-        [
-            (100001, "\ta b\tc  d\ne "),  # leading tab survives trim
-            (100002, ""),                 # empty
-            (100003, None),               # null text
-            (100004, "one two"),          # too short for a 3-gram
-            (100005, " x y z x y z x y z "),  # repeated shingles dedup
-        ],
-        "doc_id long, text string",
-    )
+    edge = spark.createDataFrame(_SHINGLE_EDGE_DOCS, "doc_id long, text string")
     for src in (docs, edge):
         for n in (3, 8):
             arrow = sorted(
-                tuple(r)
-                for r in _shingle_table(src, kernel="arrow", n=n).collect()
+                tuple(r) for r in _shingle_table(src, n=n).collect()
             )
-            fold = sorted(
+            ref = sorted(
                 tuple(r)
-                for r in _shingle_table(src, kernel="fold", n=n).collect()
+                for r in src.select(
+                    "doc_id", F.explode(word_shingles(F.col("text"), n)).alias("s")
+                )
+                .withColumn("fp", _md5_prefix(F.col("s"), 15))
+                .collect()
             )
-            assert arrow == fold
+            assert arrow == ref
 
 
 def test_minhash_signatures_arrow_identical_to_fold(spark):
-    """The zero-shuffle map-side signature kernel must reproduce the
-    groupBy fold EXACTLY — all-integer affine minima, so identity (not
-    closeness) is the bar."""
+    """The zero-shuffle map-side signature kernel must reproduce a groupBy
+    over the expression-built shingle relation EXACTLY — all-integer
+    affine minima, so identity (not closeness) is the bar."""
     from flink_http_full_cache_connector_spark.operators.dedup import (
-        _shingle_table,
-        minhash_signatures,
+        MINHASH_A,
+        MINHASH_B,
+        NUM_MINHASHES,
+        P,
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    arrow = sorted(tuple(r) for r in minhash_signatures(docs).collect())
-    fold = sorted(
-        tuple(r)
-        for r in minhash_signatures(
-            docs, shingles=_shingle_table(docs)  # shingles= resolves to fold
-        ).collect()
-    )
-    assert arrow == fold
-    # the explicit arrow+shingles combination must refuse, not silently
-    # degrade to the fold path (round-9 ADVICE)
-    import pytest
-
-    with pytest.raises(ValueError, match="arrow"):
-        minhash_signatures(
-            docs, shingles=_shingle_table(docs), kernel="arrow"
+    edge = spark.createDataFrame(_SHINGLE_EDGE_DOCS, "doc_id long, text string")
+    for src in (docs, edge):
+        sh = src.select(
+            "doc_id", F.explode(word_shingles(F.col("text"))).alias("s")
+        ).withColumn("h", _md5_prefix(F.col("s"), 8) % P)
+        ref = sh.groupBy("doc_id").agg(
+            F.count("*").alias("n"),
+            *[
+                F.min((F.lit(MINHASH_A[j]) * F.col("h") + MINHASH_B[j]) % P)
+                for j in range(NUM_MINHASHES)
+            ],
         )
+        arrow = sorted(tuple(r) for r in minhash_signatures(src).collect())
+        assert arrow == sorted(tuple(r) for r in ref.collect())
+
+
+def _semantic_prune_reference(vecs, assign, threshold):
+    """{vec_id: is_kept}: a member is dropped when an EARLIER member of its
+    cell — (cent_sim, vec_id) ascending — has fold cosine >= threshold."""
+    kept = {}
+    for vid, cell, cs in assign:
+        earlier = [
+            u for u, c2, cs2 in assign if c2 == cell and (cs2, u) < (cs, vid)
+        ]
+        kept[vid] = not any(
+            _fold_cos(vecs[u], vecs[vid]) >= threshold for u in earlier
+        )
+    return kept
 
 
 def test_semantic_prune_kernels_agree_near_threshold(spark):
-    """Round-8 ADVICE: the arrow kernel decides the >= epsilon pair test on
-    numpy/BLAS doubles while the fold kernel runs the exact sequential
-    fold — a pair within ~1 ulp of the threshold could flip between them
-    on a divergent BLAS build.  Engineer pairs sitting ~1e-14 around
+    """Round-8 ADVICE: the kernel decides the >= epsilon pair test on
+    numpy/BLAS doubles while the oracle runs the exact sequential fold — a
+    pair within ~1 ulp of the threshold could flip between them on a
+    divergent BLAS build.  Engineer pairs sitting ~1e-14 around
     SEMANTIC_DUP_THRESHOLD (100x the expected GEMM-vs-fold ulp noise on
-    64-dim dots, so stable on a sane platform, loud on a divergent one)
-    and require the kernels to agree exactly."""
+    64-dim dots, so stable on a sane platform, loud on a divergent one),
+    a pair at EXACTLY the threshold and a (cent_sim, vec_id) tie, and
+    require the kernel to agree with a sequential-fold reference."""
     import math
 
     import numpy as np
@@ -800,32 +841,50 @@ def test_semantic_prune_kernels_agree_near_threshold(spark):
         w[0] = c
         w[1] = math.sqrt(1.0 - c * c)
         vecs[i] = w.tolist()
+    # cell 0: all four; cent_sim ascending with vec_id so the earlier rule
+    # keeps vec 0 and tests the pair decision against each crafted one
+    assign_rows = [(i, 0, 0.1 * (i + 1)) for i in range(4)]
+    # cell 1: cosine exactly 0.3 in every engine (dot 3, norms 1 and 10)
+    assert t == 0.3
+    vecs[10] = u.tolist()
+    vecs[11] = [3.0, 9.0, 3.0, 1.0] + [0.0] * (rng_dim - 4)
+    assign_rows += [(10, 1, 0.1), (11, 1, 0.2)]
+    # cell 2: identical vectors with equal cent_sim — the lower id is kept
+    vecs[20] = vecs[21] = [1.0, 2.0] + [0.0] * (rng_dim - 2)
+    assign_rows += [(20, 2, 0.5), (21, 2, 0.5)]
     emb = spark.createDataFrame(
         [(i, v) for i, v in vecs.items()], "vec_id long, embedding array<double>"
     )
-    # all four in one cell; cent_sim ascending with vec_id so the earlier
-    # rule keeps vec 0 and tests the pair decision against each crafted one
     assign = spark.createDataFrame(
-        [(i, 0, 0.1 * (i + 1)) for i in vecs],
-        "vec_id long, cell_id long, cent_sim double",
+        assign_rows, "vec_id long, cell_id long, cent_sim double"
     ).persist()
-    arrow = sorted(
-        tuple(r) for r in _semantic_prune(emb, assign, kernel="arrow").collect()
-    )
-    fold = sorted(
-        tuple(r) for r in _semantic_prune(emb, assign, kernel="fold").collect()
-    )
-    assert arrow == fold
-    # sanity: the fixture actually straddles the threshold (one side kept)
-    kept = {r[0]: r[3] for r in arrow}
-    assert kept[1] and not kept[3], kept
+    got = {r[0]: r[3] for r in _semantic_prune(emb, assign).collect()}
+    assert got == _semantic_prune_reference(vecs, assign_rows, t)
+    # sanity: the fixture straddles the threshold and pins both rules
+    assert got[1] and not got[3], got
+    assert not got[11] and got[20] and not got[21], got
+
+
+def _two_level_assign_reference(vecs, coarse_ids, fine_co, probes):
+    """{vec_id: (cell_id, cent_sim)}: the top-``probes`` coarse cells by
+    (fold cosine DESC, co_id ASC), then the best fine centroid of those
+    cells by (fold cosine DESC, cent_id ASC); cent_sim is its fold cosine."""
+    out = {}
+    for vid, v in vecs.items():
+        ranked = sorted(coarse_ids, key=lambda c: (-_fold_cos(v, vecs[c]), c))
+        cells = ranked[:probes]
+        fines = [f for f, co in fine_co.items() if co in cells]
+        best = min(fines, key=lambda f: (-_fold_cos(v, vecs[f]), f))
+        out[vid] = (best, _fold_cos(v, vecs[best]))
+    return out
 
 
 def test_two_level_assign_kernels_agree_near_tie(spark):
     """Round-8 ADVICE sibling fixture: two fine centroids engineered
-    ~1e-14 apart in cosine from a probe vector — the arrow argmax and the
-    fold max_by must pick the same winner (and the exact-fold re-score
-    makes cent_sim bit-identical by construction)."""
+    ~1e-14 apart in cosine from a probe vector, and two identical fine
+    centroids (an exact tie, lowest id wins) — the GEMM argmax must pick
+    the sequential-fold reference's winner, and the exact-fold re-score
+    makes cent_sim bit-identical to it."""
     import math
 
     import numpy as np
@@ -839,7 +898,8 @@ def test_two_level_assign_kernels_agree_near_tie(spark):
     base = 0.9
     rows = []
     # vec 0/1: the two near-tied fine centroid seeds; vec 2: coarse seed
-    # twin; vec 3: the probe
+    # twin; vec 3: the probe (vec 2's twin, so with cells=4 fine centroids
+    # 2 and 3 tie exactly)
     for i, eps in enumerate((0.0, 1e-14)):
         c = base + eps
         w = np.zeros(dim)
@@ -850,38 +910,71 @@ def test_two_level_assign_kernels_agree_near_tie(spark):
     probe[0] = 1.0
     rows.append((2, probe.tolist()))
     rows.append((3, probe.tolist()))
+    vecs = dict(rows)
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    coarse, fine = two_level_index(emb, cells=3, k=1)
-    arrow = sorted(
-        tuple(r)
-        for r in two_level_assign(emb, coarse, fine, kernel="arrow").collect()
+    for cells, k, probes in ((3, 1, 1), (4, 1, 1), (4, 2, 2)):
+        coarse, fine = two_level_index(emb, cells=cells, k=k)
+        fine_co = {r["cent_id"]: r["co_id"] for r in fine.collect()}
+        got = {
+            r["vec_id"]: (r["cell_id"], r["cent_sim"])
+            for r in two_level_assign(
+                emb, coarse, fine, coarse_probes=probes
+            ).collect()
+        }
+        ref = _two_level_assign_reference(vecs, list(range(k)), fine_co, probes)
+        assert got == ref, (cells, k, probes)
+    assert got[3][0] == 2  # the exact tie breaks to the lower cent_id
+
+
+def _pq_encode_reference(vecs, codebook):
+    """{vec_id: codes}: per subspace the codeword with the least squared
+    distance summed left to right over its dims, lowest j on ties."""
+    from flink_http_full_cache_connector_spark.operators.similarity import (
+        PQ_M,
+        PQ_SUB,
     )
-    fold = sorted(
-        tuple(r)
-        for r in two_level_assign(emb, coarse, fine, kernel="fold").collect()
-    )
-    assert arrow == fold
+
+    out = {}
+    for vid, v in vecs.items():
+        codes = []
+        for m in range(PQ_M):
+            best = None
+            for j, w in sorted(codebook.items()):
+                acc = 0.0
+                for i in range(m * PQ_SUB, (m + 1) * PQ_SUB):
+                    d = float(v[i]) - float(w[i])
+                    acc = acc + d * d
+                if best is None or acc < best[0]:
+                    best = (acc, j)
+            codes.append(best[1])
+        out[vid] = tuple(codes)
+    return out
 
 
 def test_pq_encode_arrow_codes_bit_identical_to_fold(spark):
     """The Arrow PQ encoder accumulates squared distances left-to-right
-    over dims — the exact IEEE float64 sequence the fold kernel runs —
-    so codes must be IDENTICAL, not merely close (the full SQL oracle of
-    sim_ann_ivf_2level_pq depends on it; round-8 verdict #3)."""
+    over dims — the exact IEEE float64 sequence of a sequential fold — so
+    codes must be IDENTICAL to the reference, not merely close (the full
+    SQL oracle of sim_ann_ivf_2level_pq depends on it; round-8 verdict
+    #3).  A second codebook repeats codeword 0 as the last codeword, so
+    every subspace that picks it is an exact tie (lowest j wins)."""
     from flink_http_full_cache_connector_spark.operators.similarity import (
         PQ_K,
-        as_double,
         pq_encode,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    cb = emb.where(F.col("vec_id") < PQ_K).select(
-        F.col("vec_id").cast("int").alias("j"),
-        as_double(F.col("embedding")).alias("w"),
-    )
-    arrow = sorted(tuple(r) for r in pq_encode(emb, cb, kernel="arrow").collect())
-    fold = sorted(tuple(r) for r in pq_encode(emb, cb, kernel="fold").collect())
-    assert arrow == fold
+    vecs = {r["vec_id"]: r["embedding"] for r in emb.collect()}
+    base = {j: vecs[j] for j in range(PQ_K)}
+    tied = {**base, PQ_K - 1: base[0]}
+    for cb in (base, tied):
+        cb_df = spark.createDataFrame(
+            [(j, [float(x) for x in w]) for j, w in cb.items()],
+            "j int, w array<double>",
+        )
+        got = {r[0]: tuple(r[1:]) for r in pq_encode(emb, cb_df).collect()}
+        assert got == _pq_encode_reference(vecs, cb)
+    assert set(got[0]) == {0}  # vec 0 IS codeword 0: a tie in every subspace
 
 
 def test_temperature_sampling_flattens_shares(spark, tmp_path):
@@ -1869,8 +1962,8 @@ def test_zero_vector_behavior_pinned(spark):
     """Round-9 ADVICE: the 1e-300 zero-norm clamp exists only in the Arrow
     SELECTION stages, so the 'kernels agree on degenerate input' claim was
     assumed, not pinned.  Actual semantics under this engine's ANSI mode,
-    pinned here: every kernel that EMITS a cosine — the fold twins and
-    two_level_assign's exact-fold re-scored output (both kernels) — fails
+    pinned here: everything that EMITS a cosine — the fold cosine and
+    two_level_assign's exact-fold re-scored output — fails
     fast with DIVIDE_BY_ZERO on an all-zero vector; the one selection-only
     kernel (flat_assign_arrow, Lloyd's training assignment) tolerates it
     deterministically: sim clamps to exactly 0.0 everywhere and the vector
@@ -1893,12 +1986,11 @@ def test_zero_vector_behavior_pinned(spark):
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
         emb.select(cosine(F.col("embedding"), F.col("embedding"))).collect()
 
-    # 2. both two_level_assign kernels fail fast (the arrow kernel's
-    #    emitted cent_sim is the exact fold re-score)
+    # 2. two_level_assign fails fast (its emitted cent_sim is the exact
+    #    fold re-score)
     coarse, fine = two_level_index(emb, k=2, cells=4)
-    for kernel in ("arrow", "fold"):
-        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-            two_level_assign(emb, coarse, fine, kernel=kernel).collect()
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        two_level_assign(emb, coarse, fine).collect()
 
     # 3. the selection-only training kernel tolerates the zero vector:
     #    clamped sims are exactly 0.0 against every centroid, first-argmax
@@ -1917,25 +2009,53 @@ def test_zero_vector_behavior_pinned(spark):
 def test_embedding_lsh_kernels_agree(spark):
     """Round-10: dedup_embedding_lsh's verify moved in-bucket (float32
     GEMM prune + exact-fold decision) after the sf10 profile measured the
-    pair-join fold verify at 182 s of 215 s.  The arrow and fold kernels
-    must emit the IDENTICAL pair set and sims — the exact fold makes the
-    decision in both, so this pins the prune's no-miss property and the
+    pair-join fold verify at 182 s of 215 s.  It must emit the IDENTICAL
+    pair set and sims as the expression reference — fold-dot signatures
+    (``lsh_signatures``), id-pair bucket self-join, fold cosine verify on
+    every candidate — which pins the prune's no-miss property and the
     GEMM sign bits."""
+    from flink_http_full_cache_connector_spark.functions.rounding import trunc6
+    from flink_http_full_cache_connector_spark.functions.vectors import (
+        as_double,
+        cosine,
+    )
     from flink_http_full_cache_connector_spark.operators.dedup import (
+        COSINE_DUP_THRESHOLD,
+        DEDUP_LSH_TABLES,
         _embedding_lsh_pairs,
+        _lsh_bits_for,
+    )
+    from flink_http_full_cache_connector_spark.operators.similarity import (
+        lsh_planes,
+        lsh_signatures,
     )
 
-    def run(kernel):
-        return sorted(
-            tuple(r)
-            for r in _embedding_lsh_pairs(
-                spark, SF_DIR, kernel=kernel
-            ).collect()
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    planes = lsh_planes(
+        emb, tables=DEDUP_LSH_TABLES, bits=_lsh_bits_for(emb.count())
+    )
+    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
+    sigs = lsh_signatures(vecs, planes, tables=DEDUP_LSH_TABLES)
+    cand = (
+        sigs.select(F.col("vec_id").alias("vec_a"), "table_id", "bucket")
+        .join(
+            sigs.select(F.col("vec_id").alias("vec_b"), "table_id", "bucket"),
+            ["table_id", "bucket"],
         )
-
-    arrow, fold = run("arrow"), run("fold")
-    assert arrow == fold
-    assert len(arrow) > 0  # non-vacuous
+        .where(F.col("vec_a") < F.col("vec_b"))
+        .select("vec_a", "vec_b")
+        .distinct()
+    )
+    sim = cosine(F.col("va"), F.col("vb"))
+    ref = (
+        cand.join(vecs.toDF("vec_a", "va"), "vec_a")
+        .join(vecs.toDF("vec_b", "vb"), "vec_b")
+        .where(sim >= COSINE_DUP_THRESHOLD)
+        .select("vec_a", "vec_b", trunc6(sim))
+    )
+    got = sorted(tuple(r) for r in _embedding_lsh_pairs(spark, SF_DIR).collect())
+    assert got == sorted(tuple(r) for r in ref.collect())
+    assert len(got) > 0  # non-vacuous
 
 
 def test_lsh_sign_gemm_matches_fold_near_zero(spark):
@@ -2009,22 +2129,31 @@ def test_lsh_sign_gemm_matches_fold_near_zero(spark):
 
 
 def test_pca_power_kernels_agree(spark):
-    """Round-10: the power-iteration pass moved to GEMV partials (the fold
-    form ran n interpreted dots AND shuffled n*dim scalar rows per pass —
-    >590 s at sf100 for the 12-step train).  Both kernels are valid under
-    the contract gates; they must converge to the SAME direction (the
-    iteration is contractive, so order-of-summation noise cannot push
-    them apart) and both must satisfy the registered query's booleans."""
+    """The Gram-form power iteration (one collected XᵀX, driver-side
+    steps) must land on the direction numpy's exact eigendecomposition of
+    XᵀX gives after the same number of steps from the same start, and its
+    Rayleigh quotient must be that iterate's."""
     import numpy as np
 
     from flink_http_full_cache_connector_spark.operators.similarity import (
+        PCA_ITERS,
         pca_power_train,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    va, la = pca_power_train(emb, kernel="arrow")
-    vf, lf = pca_power_train(emb, kernel="fold")
-    va, vf = np.asarray(va), np.asarray(vf)
-    # same direction (sign-aligned) to far tighter than the contract's 10%
-    assert abs(abs(float(va @ vf)) - 1.0) < 1e-9
-    assert abs(la - lf) <= 1e-6 * abs(lf)
+    v, lam = pca_power_train(emb)
+    X = np.array(
+        [r.embedding for r in emb.select("embedding").collect()], dtype=np.float64
+    )
+    w, Q = np.linalg.eigh(X.T @ X)
+    # the k-step power iterate in the eigenbasis: v_k ∝ Q diag(w^k) Qᵀ v_0
+    v0 = np.full(X.shape[1], X.shape[1] ** -0.5)
+    c = Q.T @ v0
+    vk = Q @ (c * (w / w[-1]) ** PCA_ITERS)
+    vk /= np.linalg.norm(vk)
+    v_prev = Q @ (c * (w / w[-1]) ** (PCA_ITERS - 1))
+    v_prev /= np.linalg.norm(v_prev)
+    v = np.asarray(v)
+    assert abs(float(v @ vk) - 1.0) < 1e-9
+    lam_ref = float(v_prev @ (Q @ (w * (Q.T @ v_prev))))
+    assert abs(lam - lam_ref) <= 1e-9 * lam_ref

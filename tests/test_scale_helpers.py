@@ -63,12 +63,6 @@ def test_build_session_reuses_active_with_aqe(spark):
 
     s = build_session()
     assert s.conf.get("spark.sql.adaptive.enabled") == "true"
-    # the historical import path keeps working (deprecation re-export)
-    from flink_http_full_cache_connector_spark.streaming.session import (
-        build_session as legacy_build_session,
-    )
-
-    assert legacy_build_session is build_session
 
 
 def test_kafka_reader_is_declarative(spark):
@@ -166,11 +160,12 @@ def test_write_slice_files_layout_and_content(spark, tmp_path):
 
 def test_pca_gram_matches_numpy_and_kernels(spark):
     """pca_gram's per-batch GEMM partials must sum to numpy's exact X^T X
-    (float-sum ulps only), and the gram-kernel trainer (the r11 default)
-    must land on the same direction as the pass-per-step arrow kernel."""
+    (float-sum ulps only), and the trainer must land on the same direction
+    as a numpy power iteration over that X^T X."""
     import numpy as np
 
     from flink_http_full_cache_connector_spark.operators.similarity import (
+        PCA_ITERS,
         pca_gram,
         pca_power_train,
     )
@@ -183,11 +178,15 @@ def test_pca_gram_matches_numpy_and_kernels(spark):
     )
     assert n == len(X)
     assert np.allclose(G, X.T @ X, rtol=1e-12, atol=1e-9)
-    vg, lg = pca_power_train(emb, kernel="gram")
-    va, la = pca_power_train(emb, kernel="arrow")
-    vg, va = np.asarray(vg), np.asarray(va)
-    assert abs(abs(float(vg @ va)) - 1.0) < 1e-9
-    assert abs(lg - la) <= 1e-6 * abs(la)
+    vg, lg = pca_power_train(emb)
+    C = X.T @ X
+    v = np.full(len(C), len(C) ** -0.5)
+    for _ in range(PCA_ITERS):
+        u = C @ v
+        la = float(v @ u)
+        v = u / np.linalg.norm(u)
+    assert abs(float(np.asarray(vg) @ v) - 1.0) < 1e-9
+    assert abs(lg - la) <= 1e-9 * abs(la)
 
 
 def test_two_level_assign_carry_through_matches_scored_selection(spark):
@@ -195,7 +194,8 @@ def test_two_level_assign_carry_through_matches_scored_selection(spark):
     chosen⋈v re-attach join and (with carry_vec) passes the vector through
     the stage-2 cogroup instead.  The SELECTION must equal the scored
     kernel's selection row-for-row, and the carried vector must be the
-    double-widened input vector itself."""
+    double-widened input vector itself — also when some coarse cells get
+    no probe."""
     from flink_http_full_cache_connector_spark.operators.similarity import (
         two_level_assign,
         two_level_index,
@@ -203,20 +203,55 @@ def test_two_level_assign_carry_through_matches_scored_selection(spark):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     coarse, fine = two_level_index(emb, cells=16, k=4)
-    scored = two_level_assign(emb, coarse, fine, coarse_probes=2)
-    fast = two_level_assign(
-        emb, coarse, fine, coarse_probes=2, carry_vec=True, score=False
-    )
-    a = {r["vec_id"]: r["cell_id"] for r in scored.collect()}
-    rows = fast.collect()
-    b = {r["vec_id"]: r["cell_id"] for r in rows}
-    assert a == b  # identical selection, join or no join
     vs = {
         r["vec_id"]: [float(x) for x in r["embedding"]]
         for r in emb.select("vec_id", "embedding").collect()
     }
-    for r in rows:
-        assert [float(x) for x in r["v"]] == vs[r["vec_id"]]
+    # vec 0 alone probes 2 of the 4 coarse cells: the other two reach the
+    # stage-2 cogroup with fine rows and no probes (an empty carry frame)
+    for src in (emb, emb.where(F.col("vec_id") == 0)):
+        scored = two_level_assign(src, coarse, fine, coarse_probes=2)
+        fast = two_level_assign(
+            src, coarse, fine, coarse_probes=2, carry_vec=True, score=False
+        )
+        a = {r["vec_id"]: r["cell_id"] for r in scored.collect()}
+        rows = fast.collect()
+        b = {r["vec_id"]: r["cell_id"] for r in rows}
+        assert a == b  # identical selection, join or no join
+        for r in rows:
+            assert [float(x) for x in r["v"]] == vs[r["vec_id"]]
+
+
+def test_parquet_num_rows_skips_hidden_paths(spark, tmp_path):
+    """Footer row counts skip what Spark's reader skips: files and
+    directories named ``_*``/``.*`` (``_temporary/``, ``.staging/``),
+    but not ``_k=v`` partition directories."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_http_full_cache_connector_spark.operators.scale import (
+        parquet_num_rows,
+    )
+
+    layouts = {
+        "flat": [("part-0.parquet", 3), ("part-1.parquet", 2)],
+        "partitioned": [("_k=1/part-0.parquet", 3), ("_k=2/part-0.parquet", 2)],
+    }
+    hidden = [
+        ("_temporary/part-2.parquet", 5),
+        (".staging/part-3.parquet", 7),
+        ("_part-4.parquet", 11),
+        (".part-5.parquet", 13),
+        ("_k=2/_temporary/part-6.parquet", 17),
+    ]
+    for name, parts in layouts.items():
+        root = tmp_path / f"{name}.parquet"
+        for rel, n in parts + hidden:
+            path = root / rel
+            path.parent.mkdir(parents=True, exist_ok=True)
+            pq.write_table(pa.table({"x": list(range(n))}), str(path))
+        assert parquet_num_rows(str(tmp_path), name) == 5
+        assert spark.read.parquet(str(root)).count() == 5
 
 
 def test_fused_minhash_probe_candidates_match_self_join(spark):

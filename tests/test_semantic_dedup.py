@@ -284,15 +284,28 @@ def test_prototype_pruning_cut_is_exact_per_cell(spark):
         }, cell
 
 
+def _fold_cos(a, b):
+    """Cosine as a sequential left-to-right fold (the oracles' sequence)."""
+    def dot(x, y):
+        acc = 0.0
+        for p, q in zip(x, y):
+            acc = acc + float(p) * float(q)
+        return acc
+
+    return dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+
+
 def test_two_level_index_kernels_agree(spark):
     """Round-10: the fine→coarse grouping moved to the GEMM kernel
     (flat_assign_arrow) because C·K = C^1.5 interpreted fold cosines were
     the super-linear phase of the family (29.7 s / 13.5x per decade at
-    sf100).  The arrow and fold kernels must produce the IDENTICAL
-    (cent_id → co_id) map — on the fixture corpus AND on an engineered
-    near-tie: a fine centroid sitting ~1e-14 from equidistant between two
-    coarse centroids (100x the GEMM-vs-fold ulp noise on 64-dim dots, so
-    stable on a sane platform, loud on a divergent one)."""
+    sf100).  The (cent_id → co_id) map must equal a sequential-fold
+    reference — fine centroid j < k pinned to cell j, the rest to the
+    coarse centroid of highest fold cosine, lowest co_id on ties — on the
+    fixture corpus, on an engineered near-tie (a fine centroid ~1e-14 from
+    equidistant between two coarse centroids: 100x the GEMM-vs-fold ulp
+    noise on 64-dim dots, so stable on a sane platform, loud on a
+    divergent one) and on an exact tie."""
     import pyspark.sql.functions as F
 
     from flink_http_full_cache_connector_spark.operators.dedup import (
@@ -303,22 +316,33 @@ def test_two_level_index_kernels_agree(spark):
         two_level_index,
     )
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    cells = semantic_2level_cells_for(emb.count())
-    k = semantic_coarse_for(cells)
-
-    def grouping(kernel, src, c, kk):
-        _, fg = two_level_index(src, cells=c, k=kk, kernel=kernel)
+    def grouping(src, c, kk):
+        _, fg = two_level_index(src, cells=c, k=kk)
         return {
             r["cent_id"]: r["co_id"]
             for r in fg.select("cent_id", "co_id").collect()
         }
 
-    assert grouping("arrow", emb, cells, k) == grouping("fold", emb, cells, k)
+    def reference(src, c, kk):
+        vecs = {
+            r["vec_id"]: r["embedding"]
+            for r in src.where(F.col("vec_id") < c).collect()
+        }
+        return {
+            j: j
+            if j < kk
+            else min(range(kk), key=lambda co: (-_fold_cos(v, vecs[co]), co))
+            for j, v in vecs.items()
+        }
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    cells = semantic_2level_cells_for(emb.count())
+    k = semantic_coarse_for(cells)
+    assert grouping(emb, cells, k) == reference(emb, cells, k)
 
     # engineered near-tie: coarse 0 = e0, coarse 1 = e1; fine centroid 3
-    # at 45 degrees + 1e-14 tilt toward e1 — both kernels must agree on
-    # the SAME winner (whichever it is), not silently diverge
+    # at 45 degrees + 1e-14 tilt toward e1; fine centroid 6 at exactly 45
+    # degrees (equal cosines in every engine: the lower co_id wins)
     dim = 8
     e = np.eye(dim)
     tilt = 1e-14
@@ -329,9 +353,9 @@ def test_two_level_index_kernels_agree(spark):
         (3, ((1.0 - tilt) * e[0] + (1.0 + tilt) * e[1]).tolist()),
         (4, e[3].tolist()),
         (5, (0.7 * e[1] + 0.3 * e[4]).tolist()),
+        (6, (e[0] + e[1]).tolist()),
     ]
     tiny = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    ga = grouping("arrow", tiny, 6, 2)
-    gf = grouping("fold", tiny, 6, 2)
-    assert ga == gf
-    assert ga[3] == 1  # the 1e-14 tilt decides identically in both
+    got = grouping(tiny, 7, 2)
+    assert got == reference(tiny, 7, 2)
+    assert got[3] == 1 and got[6] == 0

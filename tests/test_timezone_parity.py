@@ -2,12 +2,11 @@
 neither the session time zone nor the process time zone is UTC.
 
 The payload's timestamps are naive wall-clock text.  What instant each
-route gives them is pinned against the per-row paths the routes used
-before the Arrow hand-off:
+route gives them is computed explicitly in the test:
 
-- driver route (``create_lookup_df``): the row tuples handed to Spark
-  through pandas (``_local_relation``) — top-level values read as UTC,
-  values nested in a ROW read in the session time zone;
+- driver route (``create_lookup_df``) and the operators' driver-rows
+  hand-off (``_local_relation``): top-level values read as UTC wall clock,
+  values nested in a ROW in the session time zone (America/Los_Angeles);
 - format and stream routes: row tuples yielded by a reader, whose naive
   datetimes Spark reads in the reading process's local time zone.
 
@@ -25,7 +24,7 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SCRIPT = r'''
-import datetime as dt, json, tempfile
+import datetime as dt, json, tempfile, zoneinfo
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 from flink_http_full_cache_connector_spark.rows import coerce_object
@@ -58,6 +57,11 @@ def micros(df):
 def local_micros(t):
     return None if t is None else round(t.astimezone(dt.timezone.utc).timestamp() * 10**6)
 
+EPOCH = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+
+def wall_micros(t, zone):
+    return None if t is None else (t.replace(tzinfo=zone) - EPOCH) // dt.timedelta(microseconds=1)
+
 rows = [coerce_object(n, schema) for n in NODES]
 got = {}
 with serve_json(NODES) as url:
@@ -71,8 +75,12 @@ with serve_json(NODES) as url:
     query.processAllAvailable()
     query.stop()
     got["stream"] = micros(spark.table("tz_stream"))
+got["local_relation"] = micros(_local_relation(spark, rows, schema))
+session_zone = zoneinfo.ZoneInfo("America/Los_Angeles")
 expected = {
-    "driver": micros(_local_relation(spark, rows, schema)),
+    "driver": sorted([i, wall_micros(ts, dt.timezone.utc),
+                      None if r is None else wall_micros(r[0], session_zone)]
+                     for i, ts, r in rows),
     "reader": sorted([i, local_micros(ts), None if r is None else local_micros(r[0])]
                      for i, ts, r in rows),
 }
@@ -98,6 +106,7 @@ def test_naive_timestamps_keep_their_meaning_on_every_route(process_tz, tmp_path
     out = json.loads(lines[-1][len("RESULT "):])
     got, expected = out["got"], out["expected"]
     assert got["driver"] == expected["driver"]
+    assert got["local_relation"] == expected["driver"]
     assert got["format"] == expected["reader"]
     assert got["stream"] == expected["reader"]
     # the zones really differ: the driver route reads top-level values as UTC
